@@ -39,19 +39,17 @@ def _all_triples(spark, sf_dir):
     audit-family queries (counts, property audit, shape violations, VoID)
     and the SPARQL consumption corpus.
 
-    Materialization is the checkpointed production runner writing the
-    graph-partitioned parquet table into a scratch dir, read back as a
-    flat scan — the exact consumption-side analogue of the reference
+    Materialization is the production runner (run_pipeline_checkpointed)
+    writing the graph-partitioned parquet table into a scratch dir, read
+    back as a flat scan — the consumption-side analogue of the reference
     loading its written TTLs into Virtuoso (the queries then run against
-    the LOADED store, not the construction lineage). This replaced the
-    round-5 monolithic 40-branch union + localCheckpoint: the single
-    union plan ships MB-scale task binaries (see graph_parts) and cost
-    ~30 s at sf0.1 vs ~13 s for the staged runner producing the identical
-    triple set (tools/compat_check.py proves runner equivalence). The
-    parquet read gives every family query graph partition pruning +
-    predicate pushdown at the scan.
+    the LOADED store, not the construction lineage). The runner writes
+    each graph part as its own job: one union of every part ships an
+    MB-scale task binary to every task (measured ~30 s vs ~13 s at
+    sf0.1). The parquet read gives every family query graph partition
+    pruning + predicate pushdown at the scan.
 
-    Scratch placement (round 7, deployment seam): ``AOPWIKI_ENDPOINT_SCRATCH``
+    Scratch placement (deployment seam): ``AOPWIKI_ENDPOINT_SCRATCH``
     names the parent the endpoint table is written under — any
     ``fs.py``-routable URI (``file:///...`` or a bare path locally; a
     shared-filesystem/object-store URI on a cluster, where every executor

@@ -5,7 +5,9 @@ xml_parser.py:62-727`) with a **map-only** Spark stage: every document is one
 row whose ``spans`` array already holds all of its fields, so extraction is
 pure column derivation with higher-order array functions — **zero shuffles,
 zero UDFs, zero explode/regroup round-trips**. At 10^12 documents this stage
-is embarrassingly parallel and fully whole-stage-codegen'd.
+is embarrassingly parallel. The per-field ``filter(spans, ...)`` passes are
+higher-order functions, which Spark evaluates interpreted, outside
+whole-stage codegen.
 
 Per-row invariant (BASELINE.json input_hint): the ``spans`` column is carried
 through *unmodified* on every entity DataFrame; new columns are derived, the

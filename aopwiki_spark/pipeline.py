@@ -13,10 +13,10 @@ reference's logged stage stats (pipeline.py:620-627).
 
 from __future__ import annotations
 
-import json
 import os
 import threading
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,7 +61,7 @@ def dedup_triples(df: DataFrame) -> DataFrame:
 
 
 class LazyEnts(dict):
-    """Entity-table mapping that loads a table on first access (round 7).
+    """Entity-table mapping that loads a table on first access.
 
     The checkpointed runner hands this to :class:`Inputs` so each graph
     part blocks only on the parse writes of the tables IT touches, the
@@ -81,70 +81,76 @@ class LazyEnts(dict):
         return super().__getitem__(key)
 
 
+def cached_docs(spark: SparkSession, corpus_dir: str) -> DataFrame:
+    """The corpus docs, persisted for the parse (~40 derived branches would
+    otherwise rescan and re-decode the corpus). Repartitioned to 2x cores
+    only when the planned file splits can't feed every core: the
+    round-robin exchange is near-free in one JVM but ships the whole text
+    corpus through the network stack on a real multi-executor cluster
+    (measured: input_cache 10s -> 108s on local-cluster[4,4] vs [1,4]),
+    and split-planned partitions keep the cache data-local to the scan.
+    The .rdd probe is one driver-side plan conversion (~0.1s)."""
+    docs = read_docs(spark, corpus_dir)
+    par = spark.sparkContext.defaultParallelism
+    if docs.rdd.getNumPartitions() < par:
+        docs = docs.repartition(par * 2)
+    return docs.persist()
+
+
 class Inputs:
     """Lazily-built shared inputs for one corpus (all DataFrames are lazy;
-    this just avoids re-deriving the plan fragments)."""
+    this just avoids re-deriving the plan fragments).
+
+    Construction contract:
+
+    * ``ents`` given: the entity tables are used as they are (e.g. the
+      parse checkpoint, already ARR-filtered); the corpus is not read. A
+      :class:`LazyEnts` mapping is kept as-is so its per-table gating
+      survives.
+    * otherwise the entities are parsed from ``docs`` (default
+      :func:`cached_docs`), and the ARR filter applies to ``aops`` here.
+      Inputs owns that docs cache: :meth:`cleanup` releases it.
+    * ``load_assoc`` given: :meth:`assoc` returns its result (e.g. a read
+      of the gene checkpoint) instead of running the detection UDFs.
+    """
 
     def __init__(self, spark: SparkSession, corpus_dir: str,
-                 cache_input: bool = True,
                  config: PipelineConfig | None = None,
                  ents: dict | None = None,
-                 docs: DataFrame | None = None):
+                 docs: DataFrame | None = None,
+                 load_assoc=None):
         self.spark = spark
         self.corpus_dir = corpus_dir
         self.config = config or DEFAULT_CONFIG
+        self._persisted = []
         if ents is not None:
-            # Checkpoint-backed construction: entity tables come from the
-            # materialized parse-stage parquet (lineage already cut); no
-            # corpus read at all. A LazyEnts mapping is kept as-is so its
-            # per-table gating survives (dict() would eagerly drop it).
             self.docs = None
             self.ents = ents if isinstance(ents, LazyEnts) else dict(ents)
         else:
-            # The graph-materialize union derives ~40 branches from the
-            # parsed entities; caching the input avoids ~40 rescans+
-            # re-decodes of the corpus. The checkpointed runner replaces
-            # this cache with the parse-stage parquet (north_rule).
-            if docs is not None:
-                # caller-prepared (already repartitioned+persisted) cache —
-                # lets the runner start materializing it while this
-                # constructor's ~seconds of plan building run concurrently
-                self.docs = docs
-            else:
-                self.docs = read_docs(spark, corpus_dir)
-                if cache_input:
-                    # Repartition only when the planned file splits can't
-                    # feed every core (small corpora / single-file inputs):
-                    # the round-robin exchange is near-free in one JVM but
-                    # ships the whole text corpus through the network stack
-                    # on a real multi-executor cluster, and split-planned
-                    # partitions keep the cache data-local to the scan. The
-                    # .rdd probe is one driver-side plan conversion (~0.1s)
-                    # vs a full-corpus shuffle.
-                    par = spark.sparkContext.defaultParallelism
-                    if self.docs.rdd.getNumPartitions() < par:
-                        self.docs = self.docs.repartition(par * 2)
-                    self.docs = self.docs.persist()
+            self.docs = docs if docs is not None else cached_docs(
+                spark, corpus_dir)
+            self._persisted.append(self.docs)
             self.ents = parse_entities(self.docs)
-        if self.config.filter_arr_aops:
-            # Opt-in ARR-licence filter (reference pipeline.py:182-202):
-            # AOP-scope only — KEs/KERs/stressors are kept regardless.
-            self.ents["aops"] = self.ents["aops"].where(
-                F.coalesce(F.col("wiki_license"), F.lit("")) != "ARR")
+            if self.config.filter_arr_aops:
+                # Opt-in ARR-licence filter (reference pipeline.py:182-202):
+                # AOP-scope only — KEs/KERs/stressors are kept regardless.
+                self.ents["aops"] = self.ents["aops"].where(
+                    F.coalesce(F.col("wiki_license"), F.lit("")) != "ARR")
         self.hgnc_dim = read_dim(spark, corpus_dir, "hgnc_dim")
         self.gene_xref_dim = read_dim(spark, corpus_dir, "gene_xref_dim")
         self.chem_xref_dim = read_dim(spark, corpus_dir, "chem_xref_dim")
         self.promapping_dim = read_dim(spark, corpus_dir, "promapping_dim")
-        self._chem_linked = None
-        self._pro_links = None
-        self._lazy_lock = threading.Lock()
-        self._persisted = []
-        if self.docs is not None and cache_input:
-            self._persisted.append(self.docs)
         self.symbol_dim = (
             self.hgnc_dim.where(~F.col("symbol").contains("@"))
             .select(F.concat(F.lit("hgnc:"), "hgnc_id").alias("hgnc_id"),
                     "symbol"))
+        self._load_assoc = load_assoc
+        self._lazy_lock = threading.Lock()
+        self._reset()
+
+    def _reset(self):
+        self._chem_linked = None
+        self._pro_links = None
         self._detect = None
         self._ner_udf = None
         self._assoc = None
@@ -156,25 +162,18 @@ class Inputs:
         (bench reps, notebook reuse) accumulate storage blocks that starve
         execution memory — measured as a 161s -> 413s wall degradation on
         back-to-back identical runs."""
-        for df in self._persisted + [self._assoc, self._found_x]:
-            if df is not None:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-        # Reset the handle list (round 7, ADVICE r6): a cleanup ->
-        # property re-touch -> second cleanup must only release handles
-        # persisted SINCE the re-touch — Spark uncaches by logical-plan
-        # match, so re-unpersisting a stale handle can evict a sibling
-        # Inputs' live identical-plan cache entry mid-flight (the round-6
-        # CacheManager race, reintroduced via instance reuse).
+        for df in self._persisted:
+            try:
+                df.unpersist()
+            except Exception:
+                pass
+        # Reset the handle list: a cleanup -> property re-touch -> second
+        # cleanup must only release handles persisted SINCE the re-touch.
+        # Spark uncaches by logical-plan match, so re-unpersisting a stale
+        # handle can evict a sibling Inputs' live identical-plan cache
+        # entry mid-flight.
         self._persisted = []
-        self._detect = None
-        self._ner_udf = None
-        self._assoc = None
-        self._found_x = None
-        self._chem_linked = None
-        self._pro_links = None
+        self._reset()
 
     @property
     def chem_linked(self):
@@ -185,9 +184,9 @@ class Inputs:
         the checkpointed runner) neither persist an identical plan (which
         CacheManager dedupes onto the long-lived Inputs' cache entry) nor
         unpersist that SHARED entry from their cleanup() while concurrent
-        part jobs are mid-materialization — the race that intermittently
-        emptied pro_links in the enriched part (caught round 6, ~1/5 runs
-        at sf0.01). Lock-guarded: part jobs race to first-touch."""
+        part jobs are mid-materialization — a race that intermittently
+        emptied pro_links in the enriched part (~1/5 runs at sf0.01).
+        Lock-guarded: part jobs race to first-touch."""
         with self._lazy_lock:
             if self._chem_linked is None:
                 self._chem_linked = link_chemical_xrefs(
@@ -237,11 +236,16 @@ class Inputs:
     def assoc(self) -> DataFrame:
         """Per-subject gene table: (subj, genes_regex, genes_ner,
         genes_union, ner_bucket). Flag-off: genes_union == genes_regex and
-        the NER columns are empty. Persisted — the mention-detection UDFs
-        are the expensive stage and feed 6+ downstream branches (the
-        natural Iceberg stage-checkpoint boundary on a cluster)."""
+        the NER columns are empty. From ``load_assoc`` when given, else
+        computed and persisted — the mention-detection UDFs are the
+        expensive stage and feed 6+ downstream branches. A racy double
+        load is benign: the loader is a parquet read."""
         if self._assoc is None:
-            self._assoc = gene_table(self).persist()
+            if self._load_assoc is not None:
+                self._assoc = self._load_assoc()
+            else:
+                self._assoc = gene_table(self).persist()
+                self._persisted.append(self._assoc)
         return self._assoc
 
     def found_x(self) -> DataFrame:
@@ -252,6 +256,7 @@ class Inputs:
                      .distinct())
             self._found_x = link_gene_xrefs(
                 found, self.gene_xref_dim).persist()
+            self._persisted.append(self._found_x)
         return self._found_x
 
     def gene_label_map(self) -> DataFrame:
@@ -275,30 +280,6 @@ def main_gene_id_triples(inp: Inputs) -> DataFrame:
     empty_xref = inp.spark.createDataFrame([], "xref string")
     return T.gene_id_block_triples(pro_hgnc, pro_ncbi, empty_xref, pro_uni,
                                    main_style=True)
-
-
-def main_graph(inp: Inputs, fixtures_dir: str | None = None) -> DataFrame:
-    fixtures_dir = fixtures_dir or FIXTURES_DIR
-    ents = inp.ents
-    parts = [
-        T.aop_block_triples(ents["aops"]),
-        T.ke_block_triples(ents["kes"]),
-        T.ker_block_triples(ents["kers"], ents["registry"]),
-        T.taxonomy_triples(ents),
-        T.stressor_block_triples(ents["stressors"]),
-        T.component_block_triples(ents, ents["kes"]),
-        T.bioevent_triples(ents["kes"], ents),
-        T.containment_and_backlink_triples(ents),
-        T.chemical_block_triples(inp.chem_linked),
-        T.typelabel_triples(inp.spark, fixtures_dir),
-        main_gene_id_triples(inp),
-    ]
-    if inp.config.enable_iri_labels:
-        parts.append(main_label_triples(inp, fixtures_dir))
-    main = parts[0]
-    for p in parts[1:]:
-        main = main.unionByName(p)
-    return main
 
 
 def enriched_graph(inp: Inputs) -> DataFrame:
@@ -392,9 +373,8 @@ def genes_graph(inp: Inputs) -> DataFrame:
     def xr(col):
         # no .distinct(): found_x is per-distinct-gene already, and every
         # consumer deduplicates (the part feeds dedup_triples; the
-        # declared query applies .distinct()) — three tiny-data exchange
-        # stages removed from the gene-gated critical path (round 7
-        # second pass).
+        # declared query applies .distinct()) — that keeps three tiny-data
+        # exchange stages off the gene-gated critical path.
         return found_x.select(F.explode(col).alias("xref"))
 
     out = (gene_assoc_triples
@@ -431,9 +411,9 @@ def main_label_triples_static(inp: Inputs, fixtures_dir: str | None = None
     rdfs:label surface: component labels mirroring local dc:title (D-04,
     writer.py:150-173), inverted chem-name labels on every chem xref/id
     block subject (writer.py:660-706), and the external predicate labels
-    filtered to known prefixes (writer.py:83-108). Split out (round 7) so
-    the staged runners write it without waiting for the gene checkpoint —
-    only the gene-xref labels below are genuinely gene-gated."""
+    filtered to known prefixes (writer.py:83-108). Split out so the runner
+    writes it without waiting for the gene checkpoint — only the gene-xref
+    labels below are genuinely gene-gated."""
     fixtures_dir = fixtures_dir or FIXTURES_DIR
     ents = inp.ents
     comp = [
@@ -471,8 +451,7 @@ def main_label_triples_gene(inp: Inputs) -> DataFrame:
 def main_label_triples(inp: Inputs, fixtures_dir: str | None = None
                        ) -> DataFrame:
     """Flag-gated main-graph rdfs:label surface (enable_iri_labels):
-    the static slice plus the gene xref labels (identical triple set to
-    the pre-split round-6 union — consumers deduplicate)."""
+    the static slice plus the gene xref labels."""
     return (main_label_triples_static(inp, fixtures_dir)
             .unionByName(main_label_triples_gene(inp)))
 
@@ -549,23 +528,6 @@ def _write_metadata_files(out_dir: str, metrics: dict) -> None:
         f"{VOID_RUN_DATE}T00:00:00")
 
 
-def _write_label_coverage(inp: Inputs, out_dir: str,
-                          metrics: dict) -> None:
-    """Flag-on only (D-07): emit label-coverage-report.json next to the
-    manifest and embed the per-source counts in the manifest itself.
-    Timed into phases — the report is part of the flag-on production wall
-    (the reference emits it in the same run), so its cost stays visible."""
-    if not inp.config.enable_iri_labels:
-        return
-    t0 = time.time()
-    report = label_coverage_report(inp)
-    FS.write_json(FS.join(out_dir, "label-coverage-report.json"),
-                  report, inp.spark, sort_keys=True)
-    metrics["label_coverage"] = report["per_source"]
-    metrics.setdefault("phases", {})["label_coverage"] = \
-        round(time.time() - t0, 2)
-
-
 def build_all_triples(spark: SparkSession, corpus_dir: str,
                       fixtures_dir: str | None = None,
                       config: PipelineConfig | None = None) -> DataFrame:
@@ -577,35 +539,21 @@ def build_all_triples(spark: SparkSession, corpus_dir: str,
 
 def build_all_triples_from(inp: Inputs,
                            fixtures_dir: str | None = None) -> DataFrame:
-    all_triples = (_tag(main_graph(inp, fixtures_dir), "main")
-                   .unionByName(_tag(enriched_graph(inp), "enriched"))
-                   .unionByName(_tag(genes_graph(inp), "genes")))
+    parts = [_tag(thunk(), graph) for graph, thunk
+             in part_builders(inp, fixtures_dir).values()]
     # the reference's rdflib graphs deduplicate identical triples implicitly;
     # the one global shuffle of the job
-    return dedup_triples(all_triples)
-
-
-def graph_parts(inp: Inputs, fixtures_dir: str | None = None
-                ) -> dict[str, tuple[str, DataFrame]]:
-    """The engine as named parts: {part_name: (graph, triples_df)}.
-
-    Parts are independent and individually small — the staged runner
-    executes them as concurrent jobs. Executing the whole engine as ONE
-    union stage ships the entire serialized plan in every task (a ~MB task
-    binary x thousands of tasks dominated wall clock in profiling: 0.2s
-    deserialize per task plus a broadcast-fetch convoy); per-part jobs keep
-    task binaries small and overlap scheduling latencies.
-    """
-    return {name: (graph, thunk())
-            for name, (graph, thunk) in part_builders(inp, fixtures_dir).items()}
+    return dedup_triples(reduce(DataFrame.unionByName, parts))
 
 
 def part_builders(inp: Inputs, fixtures_dir: str | None = None
                   ) -> dict[str, tuple[str, callable]]:
-    """{part_name: (graph, () -> triples_df)} — thunks so the runner can
-    construct each part's DataFrame inside its own worker thread (plan
-    construction is thousands of py4j round-trips; building all parts
-    serially on the main thread is measurable driver latency)."""
+    """The engine as named parts: {part_name: (graph, () -> triples_df)}.
+    The one list of graph parts: :func:`build_all_triples_from` unions
+    them, the checkpointed runner writes each as its own job. Thunks so the
+    runner can construct each part's DataFrame inside its own worker
+    thread (plan construction is thousands of py4j round-trips; building
+    all parts serially on the main thread is measurable driver latency)."""
     fixtures_dir = fixtures_dir or FIXTURES_DIR
     ents = inp.ents
     parts = {
@@ -619,8 +567,8 @@ def part_builders(inp: Inputs, fixtures_dir: str | None = None
         "components": ("main",
                        lambda: T.component_block_triples(ents, ents["kes"])),
         "bioevents": ("main", lambda: T.bioevent_triples(ents["kes"], ents)),
-        # single part: the three containment pieces share the persisted
-        # resolved-edge relation; separate jobs would race to materialize it
+        # single part: the containment pieces share one resolved-edge
+        # relation (one broadcast exchange)
         "containment": ("main",
                         lambda: T.containment_and_backlink_triples(ents)),
         "chem_blocks": ("main",
@@ -632,137 +580,14 @@ def part_builders(inp: Inputs, fixtures_dir: str | None = None
         "genes": ("genes", lambda: genes_graph(inp)),
     }
     if inp.config.enable_iri_labels:
-        # two parts (round 7): the static label surface writes as soon as
-        # the parse tables land; only the gene-xref labels wait for the
-        # gene checkpoint. Same triple set as the former single part.
+        # two parts: the static label surface writes as soon as the parse
+        # tables land; only the gene-xref labels wait for the gene
+        # checkpoint.
         parts["labels_static"] = (
             "main", lambda: main_label_triples_static(inp, fixtures_dir))
         parts["labels_main"] = ("main",
                                 lambda: main_label_triples_gene(inp))
     return parts
-
-
-def run_pipeline_staged(spark: SparkSession, corpus_dir: str, out_dir: str,
-                        concurrency: int = 8,
-                        config: PipelineConfig | None = None,
-                        baseline_manifest: str | None = None) -> dict:
-    """Staged execution: every graph part materializes concurrently into a
-    staging table (per-partition checkpoint + lineage cut), then ONE global
-    dedup pass writes the final triple table partitioned by graph.
-
-    Resume: a part whose staging directory already has a _SUCCESS marker is
-    skipped (per-partition checkpoint semantics of the north_rule).
-    """
-    t0 = time.time()
-    phases = {}
-    inp = Inputs(spark, corpus_dir, config=config)
-    try:
-        return _run_pipeline_staged(spark, inp, corpus_dir, out_dir,
-                                    concurrency, baseline_manifest,
-                                    t0, phases)
-    finally:
-        # release the pinned docs/chem_linked/pro_links/assoc/found_x
-        # blocks: repeated staged runs in one long-lived session otherwise
-        # accumulate storage blocks that starve execution memory (the
-        # measured 161s -> 413s back-to-back degradation).
-        inp.cleanup()
-
-
-def _run_pipeline_staged(spark, inp, corpus_dir, out_dir, concurrency,
-                         baseline_manifest, t0, phases) -> dict:
-    from concurrent.futures import ThreadPoolExecutor
-
-    # Materialize shared caches BEFORE fanning out concurrent part jobs:
-    # otherwise every job races to compute the same cached partitions
-    # (duplicated parse work + block-store lock convoy).
-    inp.docs.count()
-    inp.chem_linked.count()
-    inp.pro_links.count()
-    inp.assoc().count()
-    inp.found_x().count()
-    phases["materialize_caches"] = round(time.time() - t0, 2)
-    staging = FS.join(out_dir, "staging")
-    sio = FS.get_io(out_dir, spark)
-    parts = graph_parts(inp)
-
-    part_secs = {}
-
-    def write_part(item):
-        name, (graph, df) = item
-        path = FS.join(staging, f"part={name}")
-        if _done(path, sio):
-            return name, "resumed"
-        tp = time.time()
-        df.select(F.lit(graph).alias("graph"), "subj", "pred", "obj") \
-          .write.mode("overwrite").parquet(path)
-        part_secs[name] = round(time.time() - tp, 2)
-        return name, "written"
-
-    t1 = time.time()
-    with ThreadPoolExecutor(max_workers=concurrency) as ex:
-        statuses = dict(ex.map(write_part, parts.items()))
-    phases["part_writes"] = round(time.time() - t1, 2)
-
-    t2 = time.time()
-    final = FS.join(out_dir, "triples")
-    staged = spark.read.option("basePath", staging).parquet(
-        *[FS.join(staging, f"part={n}") for n in parts])
-    # NOTE: dropDuplicates already hash-partitions on the full key; an
-    # extra repartitionByRange would add a second full shuffle + a sampling
-    # job for marginal layout benefit. Sort within the dedup partitions for
-    # deterministic file content.
-    (dedup_triples(staged)
-     .sortWithinPartitions("pred", "subj")
-     .write.mode("overwrite").partitionBy("graph").parquet(final))
-    phases["dedup_write"] = round(time.time() - t2, 2)
-    t3 = time.time()
-    wrote = spark.read.parquet(final)
-    counts = {r["graph"]: r["n"] for r in
-              wrote.groupBy("graph").agg(F.count("*").alias("n")).collect()}
-    n_gene_assoc = wrote.where(F.col("pred") == "edam:data_1025") \
-                        .where(F.col("graph") == "genes").count()
-    # NER coverage buckets (WR-03): ok+degraded+skipped partition the
-    # KE/KER set exactly; reported per run like the reference's
-    # "BERN2 enrichment coverage" log line.
-    buckets = {r["ner_bucket"]: r["n"] for r in
-               inp.assoc().groupBy("ner_bucket")
-               .agg(F.count("*").alias("n")).collect()}
-    phases["count"] = round(time.time() - t3, 2)
-    metrics = {
-        "phases": phases,
-        "part_secs": part_secs,
-        "graphs": counts,
-        "total_triples": int(sum(counts.values())),
-        # the delta-guard metric pair (qc_delta_guard.py:24-29)
-        "gene_association_triples": int(n_gene_assoc),
-        "ner_buckets": {k: int(v) for k, v in sorted(buckets.items())},
-        "config": {
-            "enable_bern2": inp.config.enable_bern2,
-            "enable_iri_labels": inp.config.enable_iri_labels,
-            "filter_arr_aops": inp.config.filter_arr_aops,
-        },
-        "elapsed_sec": round(time.time() - t0, 2),
-        "stages": statuses,
-        "corpus_dir": corpus_dir,
-        "out_path": final,
-        "qc": {g: counts.get(g, 0) > 0 for g in ("main", "enriched", "genes")},
-    }
-    if inp.config.record_consumer_counts:
-        from aopwiki_spark.qc import consumer_query_counts
-        metrics["consumer_query_rows"] = consumer_query_counts(spark, wrote)
-    if baseline_manifest is not None:
-        # A7 week-over-week delta guard vs the last-known-good manifest
-        # (qc_delta_guard.py:24-29): >5% drop in total triples or in the
-        # edam:data_1025 count fails the run.
-        from aopwiki_spark.qc import qc_delta_guard
-        base = None
-        if FS.get_io(baseline_manifest, spark).exists(baseline_manifest):
-            base = FS.read_json(baseline_manifest, spark)
-        metrics["delta_guard"] = qc_delta_guard(metrics, base)
-    _write_label_coverage(inp, out_dir, metrics)
-    _write_metadata_files(out_dir, metrics)
-    FS.write_json(FS.join(out_dir, "manifest.json"), metrics, spark)
-    return metrics
 
 
 # Entity tables materialized by the parse-stage checkpoint. Each carries its
@@ -839,9 +664,10 @@ def run_pipeline_checkpointed(spark: SparkSession, corpus_dir: str,
     2. **gene checkpoint** — the mention-detection stage (the UDF compute
        center, plus NER when flag-on) materializes the per-subject gene
        table.
-    3. **materialize** — ONE job unions every graph branch off the
-       checkpointed stages, deduplicates globally, and writes the triple
-       table partitioned by graph.
+    3. **parts** — each graph part of :func:`part_builders` writes to its
+       own staging table as soon as its inputs land.
+    4. **dedup** — each graph deduplicates and writes its ``graph=``
+       directory of the triple table as soon as its parts land.
 
     Resume: any stage directory with _SUCCESS is skipped — a rerun after a
     mid-pipeline failure recomputes only missing stages.
@@ -869,12 +695,11 @@ def run_pipeline_checkpointed(spark: SparkSession, corpus_dir: str,
     # FileSystem for any scheme:// URI (object-store deployments get
     # resume + manifests without a POSIX mount; aopwiki_spark/fs.py).
     sio = FS.get_io(out_dir, spark)
-    # 20 workers (round 7, was 12): tasks here are thin job-submitting
-    # threads that mostly BLOCK on upstream futures (gene-gated parts,
-    # per-graph dedups, the overlapped report jobs); with only 12, the
-    # dedup futures queued behind blocked part threads and a landed
-    # graph's dedup could not start. Spark's scheduler, not this pool,
-    # governs actual task concurrency.
+    # 20 workers: tasks here are thin job-submitting threads that mostly
+    # BLOCK on upstream futures (gene-gated parts, per-graph dedups, the
+    # overlapped report jobs); with 12, the dedup futures queued behind
+    # blocked part threads and a landed graph's dedup could not start.
+    # Spark's scheduler, not this pool, governs actual task concurrency.
     pool = ThreadPoolExecutor(max_workers=20)
 
     # Stale-resume guard (completes S8: content-keyed stage cache): stage
@@ -905,17 +730,7 @@ def run_pipeline_checkpointed(spark: SparkSession, corpus_dir: str,
         # the main thread while the scan runs — the constructor's py4j
         # plan-building seconds are driver-only and otherwise leave every
         # core idle (event-log measured an ~8s all-idle startup window).
-        # Repartition ONLY when the planned file splits can't feed every
-        # core: an unconditional repartition is a full-corpus shuffle that
-        # is near-free inside one JVM but, across real executors, moves the
-        # whole text corpus through serializers and the network stack
-        # before a single row is parsed (measured: input_cache 10s -> 108s
-        # on local-cluster[4,4] vs [1,4]). Split-planned partitions also
-        # keep the cache data-local to the scan.
-        docs = read_docs(spark, corpus_dir)
-        if docs.rdd.getNumPartitions() < par:
-            docs = docs.repartition(par * 2)
-        docs = docs.persist()
+        docs = cached_docs(spark, corpus_dir)
         f_cache = pool.submit(docs.count)
         inp0 = Inputs(spark, corpus_dir, config=config, docs=docs)
         f_cache.result()
@@ -940,8 +755,8 @@ def run_pipeline_checkpointed(spark: SparkSession, corpus_dir: str,
     BIG = {"kes", "kers", "aops", "stressors"}
     # Small corpora write every table 2-wide: with ~20 MB of text the
     # "full parallelism" path emits 64 near-empty files per BIG table and
-    # pays 64 task launches + commits per write (round 7 second pass;
-    # same 2 MB/core threshold as the gene-stage spread). Real volumes
+    # pays 64 task launches + commits per write (same 2 MB/core threshold
+    # as the gene-stage spread). Real volumes
     # (>= 2 MB per core) keep the full-parallel encode.
     corpus_small = False
     if todo:
@@ -977,43 +792,33 @@ def run_pipeline_checkpointed(spark: SparkSession, corpus_dir: str,
 
     def gene_stage():
         if not _done(genes_path, sio):
-            # Build the broadcast dictionaries (gene matcher + NER model
-            # stand-in) BEFORE blocking on the kes/kers writes: they need
-            # only the dim tables, and collecting+broadcasting them is
-            # driver-side seconds that otherwise serialize after the parse
-            # barrier (event-log measured idle cores there).
-            cfg0 = config or DEFAULT_CONFIG
-            pre_detect = G.make_detector_udf(
-                spark, read_dim(spark, corpus_dir, "hgnc_dim"))
-            pre_ner = None
-            if cfg0.enable_bern2:
-                pre_ner = N.make_ner_udf(
-                    spark, read_dim(spark, corpus_dir, "ner_dim"),
-                    min_prob=cfg0.ner_min_prob,
-                    chunk_chars=cfg0.ner_chunk_chars)
             # The UDF stage is CPU-bound on text: spread it to 2x cores —
             # but only when the table's bytes justify the per-task
-            # overhead (round 7 second pass: each partition costs a
-            # python-worker round trip + broadcast deref, measured ~8 ms;
-            # at sf0.1 the 64-way spread of a 1 MB table made the stage
-            # 2x slower than reading the checkpoint's natural splits:
-            # noop 1.05 s vs 0.50 s). Threshold = 2 MB of input per core:
-            # below it the whole stage is task-overhead-bound and the
-            # file splits (8 MB row groups) already feed enough tasks.
-            # Gate on the kes/kers writes ONLY (round 7): gene_table
-            # touches no other entity table, and waiting on all ten
-            # (round 6 shape) serialized the UDF stage behind the
-            # slowest small-table write.
+            # overhead (each partition costs a python-worker round trip +
+            # broadcast deref, measured ~8 ms; at sf0.1 the 64-way spread
+            # of a 1 MB table made the stage 2x slower than reading the
+            # checkpoint's natural splits: noop 1.05 s vs 0.50 s).
+            # Threshold = 2 MB of input per core: below it the whole stage
+            # is task-overhead-bound and the file splits (8 MB row groups)
+            # already feed enough tasks.
             def udf_input(name):
                 df = read_ent(name)
                 nbytes = sum(sz for _, sz, _ in
                              sio.walk_stats(FS.join(parse_dir, name)))
                 return (df.repartition(par * 2)
                         if nbytes >= par * (2 << 20) else df)
-            base = {n: udf_input(n) for n in ("kes", "kers")}
-            udf_inp = Inputs(spark, corpus_dir, config=config, ents=base)
-            udf_inp._detect = pre_detect
-            udf_inp._ner_udf = pre_ner
+            # Gated on the kes/kers writes only: gene_table touches no
+            # other entity table.
+            udf_inp = Inputs(spark, corpus_dir, config=config,
+                             ents=LazyEnts(udf_input, ("kes", "kers")))
+            # Build the broadcast dictionaries (gene matcher + NER model
+            # stand-in) BEFORE gene_table blocks on the kes/kers writes:
+            # they need only the dim tables, and collecting+broadcasting
+            # them is driver-side seconds that otherwise serialize after
+            # the parse barrier (event-log measured idle cores there).
+            udf_inp.detect
+            if udf_inp.config.enable_bern2:
+                udf_inp.ner_udf
             # repartition, not coalesce: coalesce(2) propagates up through
             # the narrow stages and collapses the final per-subject
             # aggregation itself to 2 tasks (~7 s serial tail at 16 cores);
@@ -1031,10 +836,10 @@ def run_pipeline_checkpointed(spark: SparkSession, corpus_dir: str,
     f_gene = pool.submit(gene_stage)
 
     # ---- stage 3: part jobs as their inputs land ----
-    # LazyEnts (round 7): each part's thunk dereferences only the entity
-    # tables it consumes, inside its worker thread — parts start the
-    # moment THEIR tables land instead of barriering on the slowest of
-    # all ten parse writes (the round-6 shape).
+    # LazyEnts: each part's thunk dereferences only the entity tables it
+    # consumes, inside its worker thread — parts start the moment THEIR
+    # tables land instead of barriering on the slowest of all ten parse
+    # writes.
     ents = LazyEnts(read_ent, ENTITY_TABLES)
 
     def finish_parse():
@@ -1047,30 +852,33 @@ def run_pipeline_checkpointed(spark: SparkSession, corpus_dir: str,
             inp0.cleanup()
 
     f_parse_done = pool.submit(finish_parse)
-    inp = Inputs(spark, corpus_dir, config=config, ents=ents)
+
+    def load_gene_checkpoint():
+        f_gene.result()
+        return spark.read.parquet(genes_path)
+
+    inp = Inputs(spark, corpus_dir, config=config, ents=ents,
+                 load_assoc=load_gene_checkpoint)
     builders = part_builders(inp)
     t_parts = time.time()
     part_secs = {}
-    # Pre-touch the two shared linking caches concurrently (round 7,
-    # VERDICT r6 item 3): four parts fan out of chem_linked/pro_links;
-    # materializing each once here removes the first-touch serialization
-    # (lock + block-store convoy) from the part jobs' critical path.
+    # Pre-touch the two shared linking caches concurrently: four parts fan
+    # out of chem_linked/pro_links; materializing each once here removes
+    # the first-touch serialization (lock + block-store convoy) from the
+    # part jobs' critical path.
     f_pretouch = [pool.submit(lambda: inp.chem_linked.count()),
                   pool.submit(lambda: inp.pro_links.count())]
 
     def write_part(name):
         graph, thunk = builders[name]
         if name in ("genes", "labels_main"):
-            f_gene.result()  # needs the gene table (and its label map)
-            if inp._assoc is None:
-                inp._assoc = spark.read.parquet(genes_path)
+            inp.assoc()  # waits on the gene checkpoint
         path = FS.join(staging, f"part={name}")
         if _done(path, sio):
             return name, "resumed"
         tp = time.time()
         # DataFrame construction happens here, inside the worker thread
-        thunk().select(F.lit(graph).alias("graph"), "subj", "pred", "obj") \
-               .write.mode("overwrite").parquet(path)
+        _tag(thunk(), graph).write.mode("overwrite").parquet(path)
         part_secs[name] = round(time.time() - tp, 2)
         return name, "written"
 
@@ -1097,12 +905,9 @@ def run_pipeline_checkpointed(spark: SparkSession, corpus_dir: str,
         (dedup_triples(staged).select("subj", "pred", "obj")
          .sortWithinPartitions("pred", "subj")
          .write.mode("overwrite").parquet(gdir))
-        # Per-graph manifest counts right here (round 7): each graph's
-        # count job runs the moment ITS table lands, concurrent with the
-        # other graphs' dedup writes, instead of one serial read of the
-        # final table after every future has drained. Identical numbers —
-        # graph= is the partition key, so the old read's groupBy("graph")
-        # was exactly these per-directory counts.
+        # Per-graph manifest counts right here: each graph's count job
+        # runs the moment ITS table lands, concurrent with the other
+        # graphs' dedup writes.
         wrote_g = spark.read.parquet(gdir)
         n = wrote_g.count()
         n_assoc = (wrote_g.where(F.col("pred") == "edam:data_1025").count()
@@ -1110,26 +915,20 @@ def run_pipeline_checkpointed(spark: SparkSession, corpus_dir: str,
         return graph, n, n_assoc
 
     def ner_buckets_job():
-        # WR-03 bucket counts off the gene-stage parquet — needs only
-        # f_gene, so it overlaps the part/dedup writes (round 7; was the
-        # serial 'count' tail). Same aggregation as inp.assoc() (the
-        # runner points _assoc at this very parquet).
-        f_gene.result()
+        # WR-03 bucket counts off the gene checkpoint — needs only f_gene,
+        # so it overlaps the part/dedup writes.
         return {r["ner_bucket"]: r["n"] for r in
-                spark.read.parquet(genes_path).groupBy("ner_bucket")
+                inp.assoc().groupBy("ner_bucket")
                 .agg(F.count("*").alias("n")).collect()}
 
     def label_cov_job():
         # Flag-on label-coverage report (D-07): depends on the gene table
         # and the chem/pro linking only — NOT on the final triple table —
-        # so it overlaps the dedup writes too (round 7; was a ~1 s serial
-        # tail phase). Returns (per_source, secs); the JSON lands next to
-        # the manifest exactly as before.
+        # so it overlaps the dedup writes too. Returns (per_source, secs);
+        # the JSON lands next to the manifest.
         if not inp.config.enable_iri_labels:
             return None
-        f_gene.result()
-        if inp._assoc is None:
-            inp._assoc = spark.read.parquet(genes_path)
+        inp.assoc()  # waits on the gene checkpoint
         tlc = time.time()
         report = label_coverage_report(inp)
         FS.write_json(FS.join(out_dir, "label-coverage-report.json"),
@@ -1145,8 +944,6 @@ def run_pipeline_checkpointed(spark: SparkSession, corpus_dir: str,
     f_parse_done.result()
     for f in f_pretouch:
         f.result()
-    if inp._assoc is None:
-        inp._assoc = spark.read.parquet(genes_path)
     phases["part_writes"] = round(time.time() - t_parts, 2)
     t4 = time.time()
     counts, n_gene_assoc = {}, 0
@@ -1184,8 +981,6 @@ def run_pipeline_checkpointed(spark: SparkSession, corpus_dir: str,
         "qc": {g: counts.get(g, 0) > 0 for g in ("main", "enriched", "genes")},
     }
     if lc is not None:
-        # merged from the overlapped label_cov_job: same manifest keys the
-        # serial _write_label_coverage call produced through round 6
         metrics["label_coverage"] = lc[0]
         phases["label_coverage"] = lc[1]
     if cfg.record_consumer_counts:
@@ -1201,35 +996,4 @@ def run_pipeline_checkpointed(spark: SparkSession, corpus_dir: str,
     _write_metadata_files(out_dir, metrics)
     FS.write_json(FS.join(out_dir, "manifest.json"), metrics, spark)
     inp.cleanup()
-    return metrics
-
-
-def run_pipeline(spark: SparkSession, corpus_dir: str, out_dir: str,
-                 checkpoints: bool = True) -> dict:
-    """Materialize the triple table partitioned by (graph, pred-bucket) and
-    write the run manifest (counters + lineage). Returns the metrics dict."""
-    os.makedirs(out_dir, exist_ok=True)
-    t0 = time.time()
-    triples = build_all_triples(spark, corpus_dir)
-    # partition layout: by graph, range-distributed within for even files.
-    # (The reference writes one Turtle file per graph; we partition by graph
-    # and cluster by predicate for partition-pruned SPARQL-ish scans.)
-    out_path = FS.join(out_dir, "triples")
-    (triples
-     .repartitionByRange("graph", "pred", "subj")
-     .sortWithinPartitions("pred", "subj")
-     .write.mode("overwrite").partitionBy("graph").parquet(out_path))
-    wrote = spark.read.parquet(out_path)
-    counts = {r["graph"]: r["n"] for r in
-              wrote.groupBy("graph").agg(F.count("*").alias("n")).collect()}
-    metrics = {
-        "graphs": counts,
-        "total_triples": int(sum(counts.values())),
-        "elapsed_sec": round(time.time() - t0, 2),
-        "corpus_dir": corpus_dir,
-        "out_path": out_path,
-        # QC floors scaled analogue of Turtle_File_Quality_Control.yml:72-79
-        "qc": {g: counts.get(g, 0) > 0 for g in ("main", "enriched", "genes")},
-    }
-    FS.write_json(FS.join(out_dir, "manifest.json"), metrics, spark)
     return metrics

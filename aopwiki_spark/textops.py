@@ -90,39 +90,20 @@ def dedup_exact_keep_first(docs: DataFrame) -> DataFrame:
 # dedup: n-gram Jaccard (exact near-dup on shingle sets)
 # ---------------------------------------------------------------------------
 
-def shingles(c: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of the normalized text. Guarded: Spark's
-    sequence(1, 0) would generate a DESCENDING range, so short texts map to
-    an empty shingle set explicitly.
-
-    SCALE WARNING (round 7): as a single Column expression the lambda body
-    ``slice(toks, i, n)`` captures the whole ``tokens()`` subtree, and
-    higher-order functions evaluate interpreted with NO common-subexpression
-    elimination — the text is re-tokenized once per shingle position,
-    O(tokens^2) per document (measured: 4.1 s for 260k shingles at sf0.1
-    vs 0.5 s through :func:`shingle_rows`). Kept for API/test compat and
-    tiny inputs; every engine path uses :func:`shingle_rows`."""
-    toks = tokens(c)
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    grams = F.array_distinct(F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n))))
-    return F.when(F.size(toks) >= n, grams) \
-            .otherwise(F.array().cast("array<string>"))
-
-
 def shingle_rows(docs: DataFrame, id_col: str, n: int = 3) -> DataFrame:
     """(id, sh) exploded distinct shingles, tokenizing each text ONCE.
 
     Two projections: the token array is materialized as its own column
     (multi-referenced, so CollapseProject keeps it un-inlined), and the
-    shingle lambda slices that materialized ARRAY instead of re-running
-    split+filter per position — the round-7 fix for the O(tokens^2)
-    behavior documented on :func:`shingles`. Row-equivalent to
-    ``select(id, explode(shingles(text, n)))``: explode drops the empty
-    arrays the short-text guard produces. The guard lives INSIDE the
-    generator (when/otherwise) rather than as a ``where``: a filter on
-    ``size(_toks)`` gets pushed below the projection and re-tokenizes
-    every row a second time (measured +0.5 s at sf0.1)."""
+    shingle lambda slices that materialized ARRAY. Higher-order functions
+    evaluate interpreted with no common-subexpression elimination, so a
+    lambda over ``tokens(text)`` itself would re-tokenize the text once
+    per shingle position, O(tokens^2) per document. Texts shorter than
+    ``n`` tokens yield no rows (Spark's ``sequence(1, 0)`` would count
+    DOWN, so the guard maps them to an empty array). The guard lives
+    INSIDE the generator (when/otherwise) rather than as a ``where``: a
+    filter on ``size(_toks)`` gets pushed below the projection and
+    re-tokenizes every row a second time (measured +0.5 s at sf0.1)."""
     toks_df = docs.select(F.col(id_col).alias("id"),
                           tokens(F.col("text")).alias("_toks"))
     grams = F.when(F.size("_toks") >= n, F.array_distinct(F.transform(

@@ -27,8 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aopwiki_spark.linking import (link_chemical_xrefs, link_gene_xrefs,
-                                   link_promapping, salted_join)
+from aopwiki_spark.linking import salted_join
 from aopwiki_spark.parse import strip_html
 
 # writer.py:29-32
@@ -368,20 +367,9 @@ def bioevent_triples(kes: DataFrame, entities: dict) -> DataFrame:
 
 
 def containment_and_backlink_triples(entities: dict) -> DataFrame:
-    """J2 + J12 as one DataFrame (used by correctness queries)."""
-    parts = containment_parts(entities)
-    res = parts["edges"]
-    for k in ("hop2", "chem"):
-        res = res.unionByName(parts[k])
-    return res
-
-
-def containment_parts(entities: dict) -> dict:
-    """J2 + J12 split into independently-writable parts: 'edges' (forward
-    containment + inverse isPartOf off one resolved relation), 'hop2' (the
-    2-hop stressor traversal), 'chem' (the salted stressor->chemical
-    fan-out, J5 — no dependency on the resolve join at all). The staged
-    runner executes them concurrently."""
+    """J2 + J12: forward containment + inverse isPartOf off one resolved
+    edge relation, the 2-hop stressor traversal, and the salted
+    stressor->chemical fan-out (J5)."""
     aops, kes, kers = entities["aops"], entities["kes"], entities["kers"]
     stressors, chemicals = entities["stressors"], entities["chemicals"]
     registry = entities["registry"]
@@ -432,7 +420,7 @@ def containment_parts(entities: dict) -> dict:
                 F.col("e.tag").alias("tag")))
     all_edges = aop_edges.unionByName(
         edges(kes, ke_subj, F.col("stressor_refs"), "kstr"))
-    resolved = _resolve(all_edges, registry).persist()
+    resolved = _resolve(all_edges, registry)
 
     def _map(i):
         return F.create_map(*[x for t, s in SPEC.items()
@@ -484,11 +472,8 @@ def containment_parts(entities: dict) -> dict:
                         F.lit("dcterms:isPartOf").alias("pred"),
                         F.col("stressor_subj").alias("obj")))
 
-    return {
-        "edges": fwd.unionByName(inv),
-        "hop2": hop2,
-        "chem": fwd_chem.unionByName(inv_chem),
-    }
+    return (fwd.unionByName(inv).unionByName(hop2)
+            .unionByName(fwd_chem).unionByName(inv_chem))
 
 
 def chemical_block_triples(chem_linked: DataFrame) -> DataFrame:

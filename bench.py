@@ -128,13 +128,15 @@ def _src_key() -> str:
     return h.hexdigest()[:16]
 
 
-def _load_cached_scaling(key: str, *paths: str):
+def _load_cached_scaling(key: str, *paths: str, corpus: str | None = None):
     """Return the first cached scaling block whose src_key matches, else
     None. Tried in order: the corpus-local cache, then the committed
     fixtures twin (survives a sandbox re-clone that wipes synthdata/).
-    Corrupt/truncated files fall through to the next path (then to a
-    fresh measurement); a cache measured on a different host is reused
-    but loudly annotated + warned — its walls describe that box."""
+    With ``corpus`` given, a block measured on another corpus profile is
+    skipped too: its walls time different data. Corrupt/truncated files
+    fall through to the next path (then to a fresh measurement); a cache
+    measured on a different host is reused but loudly annotated + warned
+    — its walls describe that box."""
     here = _host_fingerprint()
     for cp in paths:
         if not os.path.exists(cp):
@@ -145,6 +147,8 @@ def _load_cached_scaling(key: str, *paths: str):
             if c.get("src_key") != key:
                 continue
             scaling = c["scaling"]
+            if corpus is not None and scaling.get("corpus") != corpus:
+                continue
         except (ValueError, OSError, KeyError, TypeError):
             print(f"bench: ignoring unreadable scaling cache {cp}",
                   file=sys.stderr)
@@ -560,7 +564,8 @@ def main():
             "fixtures", "bench_scaling_cache.json")
         cached = None
         if os.environ.get("AOPWIKI_SCALING_CACHE", "1") != "0":
-            cached = _load_cached_scaling(key, cache_path, fixture_cache)
+            cached = _load_cached_scaling(key, cache_path, fixture_cache,
+                                          corpus=profile)
 
         do_pin = os.environ.get("AOPWIKI_SCALING_PIN", "1") != "0"
 

@@ -57,6 +57,19 @@ def test_stale_local_falls_through_to_current_fixture(tmp_path):
     assert got["marker"] == "fixture"
 
 
+def test_other_corpus_forces_fresh_measurement(tmp_path):
+    # a block measured on another corpus profile times different data:
+    # same src_key is not enough to reuse it for the requested corpus
+    fix = str(tmp_path / "fixture.json")
+    with open(fix, "w") as fh:
+        json.dump({"src_key": "k1",
+                   "scaling": {"corpus": "bench", "marker": "m"}}, fh)
+    assert bench._load_cached_scaling("k1", fix,
+                                      corpus="scaling") is None
+    got = bench._load_cached_scaling("k1", fix, corpus="bench")
+    assert got["marker"] == "m"
+
+
 def test_src_key_tracks_engine_source():
     # the fingerprint covers aopwiki_spark/** and bench.py itself;
     # identical tree -> identical key (determinism of the cache gate)

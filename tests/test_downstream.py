@@ -208,16 +208,16 @@ def test_label_coverage_report(spark, smoke_dir):
 def test_label_coverage_in_manifest(spark, smoke_dir, tmp_path):
     """Flag-on runs emit label-coverage-report.json + manifest embed."""
     from aopwiki_spark.config import production_config
-    from aopwiki_spark.pipeline import run_pipeline_staged
+    from aopwiki_spark.pipeline import run_pipeline_checkpointed
     out = tmp_path / "out"
-    m = run_pipeline_staged(spark, smoke_dir, str(out), concurrency=4,
-                            config=production_config())
+    m = run_pipeline_checkpointed(spark, smoke_dir, str(out),
+                                  config=production_config())
     assert "label_coverage" in m
     rep_path = out / "label-coverage-report.json"
     assert rep_path.exists()
     rep = json.loads(rep_path.read_text())
     assert rep["per_source"] == m["label_coverage"]
-    # runners also emit the VoID + ServiceDescription metadata files
+    # the runner also emits the VoID + ServiceDescription metadata files
     void = (out / "VoID.ttl").read_text()
     assert f'void:triples {m["graphs"]["main"]}' in void.replace('"', "")
     assert ":HGNCgenes.txt a void:Dataset" in void
@@ -356,18 +356,32 @@ def test_uri_validation_engine_output(spark, smoke_dir):
 # checkpointed runner: resume on identical corpus, discard on mtime change
 # --------------------------------------------------------------------------- #
 
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_checkpointed_resume_and_stale_discard(spark, smoke_dir, tmp_path):
+    """Write, full resume, and stale discard on an mtime touch. Every run
+    must release every cache it made: a CacheManager entry left behind
+    keeps the file lists of stage tables that the next stale discard
+    deletes, and a later run that reuses the entry reads files that are
+    gone."""
     import shutil
     from aopwiki_spark.pipeline import run_pipeline_checkpointed
+    # start from an empty cache, so the check below sees only these runs
+    # (earlier tests' Inputs keep their own caches for the session)
+    spark.catalog.clearCache()
     # private corpus copy so the mtime touch can't poison other tests'
     # checkpoints against the shared smoke corpus
     corpus = str(tmp_path / "corpus")
     shutil.copytree(smoke_dir, corpus)
     out = str(tmp_path / "out")
     m1 = run_pipeline_checkpointed(spark, corpus, out)
+    assert _cache_is_empty(spark)
     assert m1["stages"]["parse"] == "written"
     # identical corpus + config -> full resume, same output
     m2 = run_pipeline_checkpointed(spark, corpus, out)
+    assert _cache_is_empty(spark)
     assert m2["stages"]["parse"] == "resumed"
     assert m2["stages"]["genes"] == "resumed"
     assert "stale_checkpoints" not in m2["stages"]
@@ -380,7 +394,37 @@ def test_checkpointed_resume_and_stale_discard(spark, smoke_dir, tmp_path):
                        if f.endswith(".parquet"))[0])
     os.utime(target, ns=(1234567890, 1234567890))
     m3 = run_pipeline_checkpointed(spark, corpus, out)
+    assert _cache_is_empty(spark)
     assert m3["stages"].get("stale_checkpoints") == "discarded"
     assert m3["stages"]["parse"] == "written"
     assert m3["fingerprint"] != m1["fingerprint"]
     assert m3["graphs"] == m1["graphs"]
+
+
+def test_checkpointed_arr_filter_matches_engine(spark, tmp_path):
+    """filter_arr_aops: the runner gives the same triple set as
+    build_all_triples under the same config, and the filter drops the
+    corpus's ARR-licensed AOPs from the parse checkpoint. Scale 2 (8 AOPs,
+    one ARR): the sf0.001 smoke corpus has 4 AOPs and none is ARR."""
+    from aopwiki_spark.config import PipelineConfig
+    from aopwiki_spark.parse import parse_entities
+    from aopwiki_spark.pipeline import (build_all_triples,
+                                        run_pipeline_checkpointed)
+    from aopwiki_spark.session import read_docs
+    from aopwiki_spark.synth.gen import generate_corpus
+    corpus = generate_corpus(str(tmp_path / "corpus"), 2)
+    cfg = PipelineConfig(filter_arr_aops=True)
+    out = str(tmp_path / "out")
+    m = run_pipeline_checkpointed(spark, corpus, out, config=cfg)
+    assert m["config"]["filter_arr_aops"] is True
+    got = {tuple(r) for r in spark.read.parquet(m["out_path"])
+           .select("graph", "subj", "pred", "obj").collect()}
+    want = {tuple(r) for r in
+            build_all_triples(spark, corpus, config=cfg).collect()}
+    assert got == want
+    arr = F.coalesce(F.col("wiki_license"), F.lit("")) == "ARR"
+    raw = parse_entities(read_docs(spark, corpus))["aops"]
+    assert raw.where(arr).count() > 0
+    parsed = spark.read.parquet(os.path.join(out, "stages", "parse", "aops"))
+    assert parsed.where(arr).count() == 0
+    assert parsed.count() == raw.where(~arr).count()

@@ -192,16 +192,16 @@ def test_manifest_records_consumer_counts(spark, smoke_dir, tmp_path):
     the manifest, and a second run delta-guards against it per query."""
     from aopwiki_spark.config import PipelineConfig
     from aopwiki_spark.federated import FED_CORPUS
-    from aopwiki_spark.pipeline import run_pipeline_staged
+    from aopwiki_spark.pipeline import run_pipeline_checkpointed
     from aopwiki_spark.sparqlcorpus import CORPUS
     cfg = PipelineConfig(record_consumer_counts=True)
     out1 = str(tmp_path / "run1")
-    m1 = run_pipeline_staged(spark, smoke_dir, out1, config=cfg)
+    m1 = run_pipeline_checkpointed(spark, smoke_dir, out1, config=cfg)
     got = m1["consumer_query_rows"]
     assert set(got) == set(CORPUS) | set(FED_CORPUS)
     assert len(got) == 12
     assert all(isinstance(v, int) for v in got.values())  # no erroring query
-    m2 = run_pipeline_staged(
+    m2 = run_pipeline_checkpointed(
         spark, smoke_dir, str(tmp_path / "run2"), config=cfg,
         baseline_manifest=os.path.join(out1, "manifest.json"))
     per_query = [c for c in m2["delta_guard"]["checks"]

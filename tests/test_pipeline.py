@@ -5,12 +5,12 @@ import os
 import pyspark.sql.functions as F
 
 from aopwiki_spark.linking import salted_join
-from aopwiki_spark.pipeline import run_pipeline
+from aopwiki_spark.pipeline import run_pipeline_checkpointed
 
 
 def test_run_pipeline_manifest(spark, smoke_dir, tmp_path):
     out = str(tmp_path / "out")
-    metrics = run_pipeline(spark, smoke_dir, out)
+    metrics = run_pipeline_checkpointed(spark, smoke_dir, out)
     assert metrics["total_triples"] > 0
     assert set(metrics["graphs"]) == {"main", "enriched", "genes"}
     assert all(metrics["qc"].values())
@@ -18,8 +18,8 @@ def test_run_pipeline_manifest(spark, smoke_dir, tmp_path):
     # partitioned layout by graph
     t = spark.read.parquet(metrics["out_path"])
     assert set(t.columns) == {"graph", "subj", "pred", "obj"}
-    # idempotent re-run (resume semantics: overwrite produces same counts)
-    metrics2 = run_pipeline(spark, smoke_dir, out)
+    # idempotent re-run (resume semantics: same counts)
+    metrics2 = run_pipeline_checkpointed(spark, smoke_dir, out)
     assert metrics2["graphs"] == metrics["graphs"]
 
 

@@ -22,7 +22,7 @@ from spark-submit; nothing in the engine assumes local mode):
 Paths may be local POSIX paths (NFS/EFS/Lustre mounts shared across the
 cluster) or any ``scheme://`` URI the cluster's Hadoop connectors resolve
 (``hdfs://``, ``s3a://``, ``gs://``, ``abfs://``, ``file://``): the
-runners route resume markers, stage fingerprints, manifest.json and the
+runner routes resume markers, stage fingerprints, manifest.json and the
 VoID/ServiceDescription sidecars through the JVM's Hadoop FileSystem
 (aopwiki_spark/fs.py) alongside Spark's own parquet writers. Each URI's
 FileSystem is resolved up front so a missing connector jar fails with one
@@ -79,8 +79,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--filter-arr-aops", action="store_true")
     ap.add_argument("--baseline-manifest", default=None,
                     help="last-known-good manifest for the delta guard")
-    ap.add_argument("--runner", choices=("checkpointed", "staged"),
-                    default="checkpointed")
     ap.add_argument("--fixtures-dir", default=None,
                     help="static writer inputs (prefixes.csv, "
                          "typelabels.txt); required when the package ships "
@@ -123,15 +121,13 @@ def main(argv: list[str] | None = None) -> int:
                     "s3a://) or use a cluster-shared POSIX mount.")
 
     from aopwiki_spark.config import PipelineConfig
-    from aopwiki_spark.pipeline import (run_pipeline_checkpointed,
-                                        run_pipeline_staged)
+    from aopwiki_spark.pipeline import run_pipeline_checkpointed
     cfg = PipelineConfig(enable_bern2=args.enable_bern2,
                          enable_iri_labels=args.enable_iri_labels,
                          filter_arr_aops=args.filter_arr_aops)
-    run = (run_pipeline_checkpointed if args.runner == "checkpointed"
-           else run_pipeline_staged)
-    manifest = run(spark, args.corpus_dir, args.out_dir, config=cfg,
-                   baseline_manifest=args.baseline_manifest)
+    manifest = run_pipeline_checkpointed(
+        spark, args.corpus_dir, args.out_dir, config=cfg,
+        baseline_manifest=args.baseline_manifest)
     print(json.dumps(manifest))
     guard = manifest.get("delta_guard")
     if guard is not None and not guard.get("passed"):

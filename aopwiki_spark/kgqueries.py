@@ -18,16 +18,9 @@ from aopwiki_spark import triples as T
 from aopwiki_spark.parse import BO_PREFIX, BP_PREFIX
 from aopwiki_spark.queries import ORACLE_CORPUS, _corpus, register
 
-_INPUTS_CACHE: dict = {}
 
-
-def _inp(spark, sf_dir) -> P.Inputs:
-    corpus = _corpus(sf_dir)
-    key = (id(spark), corpus)
-    if key not in _INPUTS_CACHE:
-        _INPUTS_CACHE[key] = P.Inputs(spark, corpus)
-    return _INPUTS_CACHE[key]
-
+def _inp(spark, sf_dir, cfg=None) -> P.Inputs:
+    return P.shared_inputs(spark, _corpus(sf_dir), cfg)
 
 
 _TRIPLES_CACHE: dict = {}
@@ -887,23 +880,14 @@ def q_kg_property_audit(spark, sf_dir):
 # KE/KER/stressor blocks stay.
 # ===========================================================================
 
-def _inp_cfg(spark, sf_dir, cfg) -> P.Inputs:
-    corpus = _corpus(sf_dir)
-    key = (id(spark), corpus, cfg.enable_bern2, cfg.enable_iri_labels,
-           cfg.filter_arr_aops)
-    if key not in _INPUTS_CACHE:
-        _INPUTS_CACHE[key] = P.Inputs(spark, corpus, config=cfg)
-    return _INPUTS_CACHE[key]
-
-
 def _arr_inp(spark, sf_dir) -> P.Inputs:
     from aopwiki_spark.config import PipelineConfig
-    return _inp_cfg(spark, sf_dir, PipelineConfig(filter_arr_aops=True))
+    return _inp(spark, sf_dir, PipelineConfig(filter_arr_aops=True))
 
 
 def _prod_inp(spark, sf_dir) -> P.Inputs:
     from aopwiki_spark.config import production_config
-    return _inp_cfg(spark, sf_dir, production_config())
+    return _inp(spark, sf_dir, production_config())
 
 
 _AOP_ARR_SQL = _AOP_SQL.replace(
@@ -1367,7 +1351,8 @@ def q_kg_label_coverage(spark, sf_dir):
 
 from aopwiki_spark import sparqlcorpus as SC  # noqa: E402
 
-_EV = f"t AS (SELECT DISTINCT subj, pred, obj FROM ({_ALL_GRAPH_SQL}))"
+_EV = (f"t AS MATERIALIZED (SELECT DISTINCT subj, pred, obj "
+       f"FROM ({_ALL_GRAPH_SQL}))")
 
 
 def _reg_sparql(name, sql):
@@ -1618,10 +1603,12 @@ def q_kg_fed_corpus(spark, sf_dir):
 # ===========================================================================
 
 def clear_caches():
-    """Unpersist + drop every cached Inputs / triple union this module
-    pinned. Call at the end of a gate run (tools/check_oracles.py does) so
-    a long-lived session reusing the module doesn't accumulate storage
-    blocks — the failure mode `Inputs.cleanup()` exists to prevent."""
+    """Unpersist + drop every cached triple union this module pinned and
+    every shared Inputs (:func:`pipeline.shared_inputs`, also behind
+    ``build_all_triples``). Call at the end of a gate run
+    (tools/check_oracles.py does) so a long-lived session reusing the
+    module doesn't accumulate storage blocks — the failure mode
+    `Inputs.cleanup()` exists to prevent."""
     for df in _TRIPLES_CACHE.values():
         SC.evict_view(df)
         try:
@@ -1637,12 +1624,7 @@ def clear_caches():
         except Exception:
             pass
     _TRIPLES_DIRS.clear()
-    for inp in _INPUTS_CACHE.values():
-        try:
-            inp.cleanup()
-        except Exception:
-            pass
-    _INPUTS_CACHE.clear()
+    P.release_shared_inputs()
 
 
 # ===========================================================================

@@ -528,12 +528,32 @@ def _write_metadata_files(out_dir: str, metrics: dict) -> None:
         f"{VOID_RUN_DATE}T00:00:00")
 
 
+_SHARED_INPUTS: dict = {}
+
+
+def shared_inputs(spark: SparkSession, corpus_dir: str,
+                  config: PipelineConfig | None = None) -> Inputs:
+    """The one :class:`Inputs` per (session, corpus, config), shared by
+    :func:`build_all_triples` and the kgqueries; its caches outlive the
+    returned lazy DataFrames, so :func:`release_shared_inputs` frees them."""
+    key = (id(spark), corpus_dir, config or DEFAULT_CONFIG)
+    if key not in _SHARED_INPUTS:
+        _SHARED_INPUTS[key] = Inputs(spark, corpus_dir, config=config)
+    return _SHARED_INPUTS[key]
+
+
+def release_shared_inputs() -> None:
+    for inp in _SHARED_INPUTS.values():
+        inp.cleanup()
+    _SHARED_INPUTS.clear()
+
+
 def build_all_triples(spark: SparkSession, corpus_dir: str,
                       fixtures_dir: str | None = None,
                       config: PipelineConfig | None = None) -> DataFrame:
     """The full engine: returns the deduplicated triple table for all three
     graphs ('main', 'enriched', 'genes')."""
-    return build_all_triples_from(Inputs(spark, corpus_dir, config=config),
+    return build_all_triples_from(shared_inputs(spark, corpus_dir, config),
                                   fixtures_dir)
 
 
@@ -597,6 +617,13 @@ ENTITY_TABLES = ("aops", "kes", "kers", "stressors", "chemicals", "taxa",
                  "bioprocs", "bioobjs", "bioacts", "registry")
 
 
+def _below_2mb_per_core(io, path: str, par: int) -> bool:
+    """True when ``path`` holds under 2 MB of input per core: below that a
+    stage is task-overhead-bound, so full-parallel spreads and writes pay
+    per-task launches and commits for near-empty partitions."""
+    return sum(sz for _, sz, _ in io.walk_stats(path)) < par * (2 << 20)
+
+
 def _done(path: str, io=None) -> bool:
     # io threaded in by the runners: get_io's session fallback is
     # thread-local-dependent and the runners probe from pool threads
@@ -622,7 +649,7 @@ def _run_fingerprint(corpus_dir: str, config: PipelineConfig | None) -> str:
       metadata — O(corpus bytes) once per launch, exact.
 
     Dotfiles are excluded from the walk: caches parked next to a corpus
-    (e.g. the bench scaling cache) are not corpus content.
+    are not corpus content.
     """
     import hashlib
     cfg = config or DEFAULT_CONFIG
@@ -755,15 +782,13 @@ def run_pipeline_checkpointed(spark: SparkSession, corpus_dir: str,
     BIG = {"kes", "kers", "aops", "stressors"}
     # Small corpora write every table 2-wide: with ~20 MB of text the
     # "full parallelism" path emits 64 near-empty files per BIG table and
-    # pays 64 task launches + commits per write (same 2 MB/core threshold
-    # as the gene-stage spread). Real volumes
-    # (>= 2 MB per core) keep the full-parallel encode.
+    # pays 64 task launches + commits per write. Real volumes (>= 2 MB per
+    # core) keep the full-parallel encode.
     corpus_small = False
     if todo:
         try:
-            cio = FS.get_io(corpus_dir, spark)
-            cbytes = sum(sz for _, sz, _ in cio.walk_stats(corpus_dir))
-            corpus_small = cbytes < par * (2 << 20)
+            corpus_small = _below_2mb_per_core(
+                FS.get_io(corpus_dir, spark), corpus_dir, par)
         except Exception:
             pass
 
@@ -797,16 +822,14 @@ def run_pipeline_checkpointed(spark: SparkSession, corpus_dir: str,
             # overhead (each partition costs a python-worker round trip +
             # broadcast deref, measured ~8 ms; at sf0.1 the 64-way spread
             # of a 1 MB table made the stage 2x slower than reading the
-            # checkpoint's natural splits: noop 1.05 s vs 0.50 s).
-            # Threshold = 2 MB of input per core: below it the whole stage
-            # is task-overhead-bound and the file splits (8 MB row groups)
-            # already feed enough tasks.
+            # checkpoint's natural splits: noop 1.05 s vs 0.50 s). Below
+            # 2 MB per core the file splits (8 MB row groups) already feed
+            # enough tasks.
             def udf_input(name):
                 df = read_ent(name)
-                nbytes = sum(sz for _, sz, _ in
-                             sio.walk_stats(FS.join(parse_dir, name)))
-                return (df.repartition(par * 2)
-                        if nbytes >= par * (2 << 20) else df)
+                if _below_2mb_per_core(sio, FS.join(parse_dir, name), par):
+                    return df
+                return df.repartition(par * 2)
             # Gated on the kes/kers writes only: gene_table touches no
             # other entity table.
             udf_inp = Inputs(spark, corpus_dir, config=config,

@@ -33,10 +33,10 @@ def norm_text(c: Column) -> Column:
 
 def _pin(out: DataFrame, *handles: DataFrame) -> DataFrame:
     """Record the persisted intermediates an operator's result depends on
-    so callers can release them once the result is materialized (round 7,
-    ADVICE r6): the returned DataFrame is lazy, so the operator itself
-    cannot unpersist — previously long-lived sessions had to clearCache
-    between workloads (the 161s->413s pinned-block degradation mode)."""
+    so callers can release them once the result is materialized: the
+    returned DataFrame is lazy, so the operator itself cannot unpersist,
+    and pinned blocks left in a long-lived session degrade later
+    workloads (161s -> 413s measured)."""
     out._aopwiki_pins = handles
     return out
 
@@ -125,7 +125,7 @@ def _shingle_rows_sz(docs: DataFrame, id_col: str, n: int = 3) -> DataFrame:
     generator, InferFiltersFromGenerate adds a ``size(_g) > 0`` filter
     whose pushdown INLINES the whole shingle pipeline into the Filter
     condition — measured 9-13 s vs 0.5 s warm at sf0.1, the same
-    filter-duplication pathology as the round-7 minhash fix. The rule
+    filter-duplication pathology as in minhash_signature_df. The rule
     skips non-cheap generator children (SPARK-36715), so wrapping the
     attribute in the transform keeps the plan filter-free."""
     toks_df = docs.select(F.col(id_col).alias("id"),
@@ -153,19 +153,17 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
     > 1000 docs: they cannot discriminate near-dups and only create hot
     keys).
 
-    Shape (round 7, second pass): ONE exchange of the postings instead of
-    the round-6 persist + freq job + semi-join + two-sided self-join +
-    two sizes joins. ``count(*) over (partition by sh)`` rides the same
+    Shape: ONE exchange of the postings (no persist, freq job, semi-join,
+    two-sided self-join or sizes joins). ``count(*) over (partition by sh)`` rides the same
     hashpartitioning the per-shingle ``collect_list`` needs, so the
     frequency cap costs no extra shuffle; set sizes travel inside the
     posting rows (``_shingle_rows_sz``); candidate pairs are generated
     from each under-cap posting list with codegen'd posexplode+slice
     (exact i<j, no interpreted HOF); one more exchange aggregates the
     per-pair intersection counts. Measured at sf0.1 (interleaved min-of-4
-    noop walls): 1.39 s vs 2.36 s committed round-6 shape vs 2.03 s for a
-    freq+semi-join variant of the same collect shape — and no pinned
-    storage blocks remain (no persist), so release_pins is now a no-op
-    for this operator.
+    noop walls): 1.39 s vs 2.36 s for the persist + self-join shape vs
+    2.03 s for a freq+semi-join variant of the same collect shape; no
+    storage blocks are pinned, so release_pins is a no-op here.
 
     Scale safety: over-cap postings cross the one exchange and are
     buffered by WindowExec (which SPILLS, ExternalAppendOnlyUnsafeRow-
@@ -241,22 +239,19 @@ def minhash_signature_df(docs: DataFrame, num_hashes: int,
                          id_col: str) -> DataFrame:
     """(id, sig: array<bigint>) minhash signatures.
 
-    Shape (round 7): explode the distinct shingles, hash each ONCE
+    Shape: explode the distinct shingles, hash each ONCE
     (pmod(md5_64, P)), then ONE hash aggregation per doc computing all
     num_hashes affine re-hash minima ``min_i((a_i*h + b_i) mod P)`` as
     plain ``min`` aggregates — whole-stage-codegen'd with map-side
     partial aggregation, so only (id, num_hashes minima) partials cross
-    the exchange. Docs with zero shingles drop out of the groupBy exactly
-    as the round-6 ``where(size(hb) > 0)`` guard dropped them.
+    the exchange. Docs with zero shingles drop out of the groupBy.
 
-    This replaces the round-6 single-``aggregate``/``zip_with`` fold over
-    a per-row hash array: that HOF tree is interpreted (no codegen) and —
-    measured in the round-7 plan — the whole shingle+md5 pipeline was
-    ALSO duplicated into the pushed-down ``size(hb) > 0`` Filter, so
-    every row paid the expensive projection twice (9.5 s of the 10.4 s
-    sf0.1 wall was the signature build). The per-hash salted-md5 and the
-    nested-``transform`` formulations remain rejected on round-6
-    measurements (each recomputes shingle+md5 per re-hash: ~20x / 170 s).
+    Not a single ``aggregate``/``zip_with`` fold over a per-row hash
+    array: that HOF tree is interpreted (no codegen), and its shingle+md5
+    pipeline is duplicated into the pushed-down ``size(hb) > 0`` Filter,
+    so every row pays it twice (9.5 s of a 10.4 s sf0.1 wall). Not a
+    per-hash salted md5 or nested ``transform`` either: each recomputes
+    shingle+md5 per re-hash (~20x / 170 s).
     """
     params = _mh_params(num_hashes)
     hashed = shingle_rows(docs, id_col).select(
@@ -291,7 +286,7 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 32,
     banded = banded.select("id", "bb.band", "bb.bucket")
     # persist: the band-bucket self-join does NOT get a reused exchange
     # for its two sides (measured — the full signature pipeline ran twice,
-    # once per side; ~2x the sf0.1 wall, round 6), so materialize the
+    # once per side; ~2x the sf0.1 wall), so materialize the
     # banded table once. Lineage-preserving and spill-safe, like the
     # posting-list persist in ngram_jaccard_pairs.
     banded = banded.persist()
@@ -340,11 +335,9 @@ def simhash(c: Column, bits: int = 16) -> Column:
 
 
 def simhash_table(docs: DataFrame, bits: int = 16) -> DataFrame:
-    # Round 7 A/B: an explode + groupBy(16 codegen'd sums) reshape (the
-    # minhash_signature_df fix) measured a wash at sf0.1 (0.74 s both,
-    # 3 reps warm) — simhash's fold runs ONCE per row with no pushed-down
-    # filter duplicating it, and the map-only shape beats adding a
-    # shuffle. Kept map-only on that measurement.
+    # Map-only: an explode + groupBy(16 codegen'd sums) reshape measured a
+    # wash at sf0.1 (0.74 s both, 3 reps warm) — the fold runs once per row
+    # with no pushed-down filter duplicating it, so a shuffle buys nothing.
     return docs.select("doc_id", simhash(F.col("text"), bits).alias("simhash"))
 
 
@@ -352,8 +345,7 @@ def simhash_table(docs: DataFrame, bits: int = 16) -> DataFrame:
 # text analysis
 # ---------------------------------------------------------------------------
 
-# Character-trigram profiles per language (round 6, upgrading the round-5
-# English-stopword heuristic): space-padded trigrams of each language's
+# Character-trigram profiles per language: space-padded trigrams of each language's
 # most frequent function words — public linguistic knowledge, hand-derived,
 # no external data. Sets are deduped + sorted so the Spark literals and the
 # DuckDB VALUES oracle (queries.py) are built from the same constant.

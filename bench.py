@@ -19,9 +19,13 @@ host contention is visible in the artifact. Corpus: the 'scaling' profile
 (~1.1M docs, ~4GB text — the compute-dominated regime a 10^12-doc corpus
 is always in).
 
-Env knobs: AOPWIKI_BENCH_SCALING=0 skips the scaling block;
-AOPWIKI_BENCH_BUDGET_SEC caps total bench wall time (default 1500);
-AOPWIKI_SCALING_PROFILE overrides the scaling corpus profile.
+The scaling legs are re-timed on every run (scaling block only at
+SPARK_GRAFT_CPUS >= 8). Env knobs: AOPWIKI_BENCH_BUDGET_SEC caps total
+bench wall time (default 2600); AOPWIKI_BENCH_HEADLINE_REPS /
+AOPWIKI_BENCH_HEADLINE_WARMUP=0 set the headline reps / skip its warm-up;
+AOPWIKI_SCALING_PROFILE overrides the scaling corpus profile;
+AOPWIKI_SCALING_SECOND=0 / AOPWIKI_SCALING_EXEC=0 skip the 4N->16N pair /
+the executor pair.
 """
 
 from __future__ import annotations
@@ -33,12 +37,6 @@ import sys
 import tempfile
 import time
 
-# RAM-backed scratch: on a real cluster shuffle/scratch bandwidth scales
-# with executor count (per-executor local disks); a single shared virtual
-# disk in local mode would make I/O a serial resource and measure the VM,
-# not the dataflow. tmpfs reproduces the per-core-constant-I/O property.
-os.environ.setdefault("SPARK_LOCAL_DIRS", "/dev/shm/spark-scratch")
-
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from aopwiki_spark.session import get_spark  # noqa: E402
@@ -46,7 +44,6 @@ from aopwiki_spark.synth.gen import ensure_corpus  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32") or 32)
-DO_SCALING = os.environ.get("AOPWIKI_BENCH_SCALING", "1") != "0"
 BUDGET = float(os.environ.get("AOPWIKI_BENCH_BUDGET_SEC", "2600"))
 T_START = time.time()
 _ROOT = os.path.dirname(os.path.abspath(__file__))
@@ -68,6 +65,21 @@ BEST_PATH = os.path.join(_ROOT, "fixtures", "bench_best.json")
 GUARD_RATIO = 1.5
 GUARD_ABS_SEC = 2.0
 
+# The per-op queries timed after the headline, each as a noop-sink wall
+# (tools/plan_audit.py explains the same list).
+PER_OP_QUERIES = (
+    "kg_gene_mentions", "kg_containment_backlinks", "kg_chemical_blocks",
+    "minhash_lsh_pairs", "ngram_jaccard_pairs", "simhash",
+    "dedup_exact_groups", "ann_cosine_topk", "ann_lsh_topk",
+    "quality_score", "kg_sparql_species_method", "kg_sparql_dataset_stats")
+
+# Scaling pairs: N vs 4N cores (and 4N vs 16N), then 1 vs 4 executors of
+# EXEC_CORES cores and EXEC_MEM_MB each; reps per leg, min taken.
+SCALING_N = 1
+REPS_N, REPS_4N, REPS_16N = 1, 3, 3
+EXEC_CORES, EXEC_MEM_MB = 4, 10240
+REPS_E1, REPS_E4 = 2, 3
+
 # Affinity baseline for _pin_tree: captured at import so 'release' restores
 # the mask the operator launched us with (e.g. under `taskset -c 0-7`)
 # instead of silently widening to every CPU on the box.
@@ -77,25 +89,9 @@ except (AttributeError, OSError):
     _BASE_AFFINITY = list(range(os.cpu_count() or 32))
 
 
-def _host_fingerprint() -> dict:
-    """Identify the measuring host: cached scaling walls are only
-    meaningful on the machine that produced them (another box's cpusets,
-    steal%% and memory bandwidth must not be republished as this run's)."""
-    model = ""
-    try:
-        with open("/proc/cpuinfo") as fh:
-            for line in fh:
-                if line.lower().startswith("model name"):
-                    model = line.split(":", 1)[1].strip()
-                    break
-    except OSError:
-        pass
-    return {"cpu_count": os.cpu_count() or 0, "cpu_model": model}
-
-
 def _atomic_json_dump(payload, path: str) -> None:
     """Write-temp-then-rename: a crash mid-write must not leave truncated
-    JSON where a later load expects a valid cache/sidecar."""
+    JSON where a later load expects a valid sidecar."""
     tmp = f"{path}.tmp.{os.getpid()}"
     with open(tmp, "w") as fh:
         json.dump(payload, fh, indent=2)
@@ -108,12 +104,8 @@ def _cpu_snap():
 
 
 def _src_key() -> str:
-    """Fingerprint of the engine source: the scaling measurement is reused
-    across bench invocations only while the code it measured is unchanged
-    (the 2-core leg alone is ~8 min — re-measuring an identical tree every
-    round would blow the bench budget without adding information). Delete
-    synthdata/scaling/.bench_scaling_cache.json or set
-    AOPWIKI_SCALING_CACHE=0 to force a fresh measurement."""
+    """Fingerprint of the measured source (aopwiki_spark/** and this
+    file), recorded in the metric line as ``src_key``."""
     import glob
     import hashlib
     root = os.path.dirname(os.path.abspath(__file__))
@@ -126,43 +118,6 @@ def _src_key() -> str:
         with open(f, "rb") as fh:
             h.update(fh.read())
     return h.hexdigest()[:16]
-
-
-def _load_cached_scaling(key: str, *paths: str, corpus: str | None = None):
-    """Return the first cached scaling block whose src_key matches, else
-    None. Tried in order: the corpus-local cache, then the committed
-    fixtures twin (survives a sandbox re-clone that wipes synthdata/).
-    With ``corpus`` given, a block measured on another corpus profile is
-    skipped too: its walls time different data. Corrupt/truncated files
-    fall through to the next path (then to a fresh measurement); a cache
-    measured on a different host is reused but loudly annotated + warned
-    — its walls describe that box."""
-    here = _host_fingerprint()
-    for cp in paths:
-        if not os.path.exists(cp):
-            continue
-        try:
-            with open(cp) as fh:
-                c = json.load(fh)
-            if c.get("src_key") != key:
-                continue
-            scaling = c["scaling"]
-            if corpus is not None and scaling.get("corpus") != corpus:
-                continue
-        except (ValueError, OSError, KeyError, TypeError):
-            print(f"bench: ignoring unreadable scaling cache {cp}",
-                  file=sys.stderr)
-            continue
-        scaling["cached"] = True
-        host = c.get("host")
-        if host is not None and host != here:
-            print(f"bench: WARNING scaling cache {cp} was measured on a "
-                  f"different host ({host} != {here}); walls/steal%/cpusets "
-                  "describe THAT box — re-measure before publishing",
-                  file=sys.stderr)
-            scaling["host_mismatch"] = {"measured_on": host, "this": here}
-        return scaling
-    return None
 
 
 def _pin_tree(n_cpus: int | None) -> str | None:
@@ -328,9 +283,8 @@ def _update_best(queries: dict, sf_name: str,
 def _compact_summary(result: dict, src_key: str) -> dict:
     """The driver-facing metric line: headline + per-op walls + the
     scaling efficiencies, nothing bulky. Phase timings, per-rep walls and
-    the executor-pair blocks live in BENCH_DETAILS.json (and the scaling
-    cache fixture); this line must parse from the driver's 2000-char
-    output tail."""
+    the executor-pair blocks live in BENCH_DETAILS.json; this line must
+    parse from the driver's 2000-char output tail."""
     out = {k: result.get(k) for k in (
         "metric", "value", "unit", "triples_per_sec",
         "headline_all_walls", "headline_steal_pct", "noisy_host",
@@ -341,8 +295,6 @@ def _compact_summary(result: dict, src_key: str) -> dict:
             "corpus", "n_triples", "cores_n", "cores_4n", "sec_n",
             "sec_4n", "rate_n", "rate_4n", "efficiency", "cached")
             if k in sc}
-        if "host_mismatch" in sc:
-            comp["host_mismatch"] = True
         for pair in ("pair_4n_16n", "executor_pair",
                      "executor_pair_1core"):
             if isinstance(sc.get(pair), dict) and "efficiency" in sc[pair]:
@@ -383,6 +335,11 @@ def _emit(result: dict, src_key: str) -> str:
 
 
 def main():
+    # RAM-backed scratch: on a real cluster shuffle/scratch bandwidth scales
+    # with executor count (per-executor local disks); a single shared virtual
+    # disk in local mode would make I/O a serial resource and measure the VM,
+    # not the dataflow. tmpfs reproduces the per-core-constant-I/O property.
+    os.environ.setdefault("SPARK_LOCAL_DIRS", "/dev/shm/spark-scratch")
     sf_name = os.path.basename(SF_DIR.rstrip("/"))
     corpus = ensure_corpus(SF_DIR)
     key = _src_key()
@@ -445,11 +402,7 @@ def main():
         .mode("overwrite").save()
     queries["kg_sparql_materialize"] = round(time.time() - t0, 3)
 
-    for name in ("kg_gene_mentions", "kg_containment_backlinks",
-                 "kg_chemical_blocks", "minhash_lsh_pairs",
-                 "ngram_jaccard_pairs", "simhash", "dedup_exact_groups",
-                 "ann_cosine_topk", "ann_lsh_topk", "quality_score",
-                 "kg_sparql_species_method", "kg_sparql_dataset_stats"):
+    for name in PER_OP_QUERIES:
         fn = qs.get(name)
         if fn is None:
             continue
@@ -524,8 +477,8 @@ def main():
     }
 
     # ---- scaling-efficiency evidence (north_rule: N vs 4N cores) ----
-    # Protocol (see BENCH.md §2): the pair defaults to local[1] vs
-    # local[4]. On a real cluster N->4N adds whole executors with their
+    # Protocol (see BENCH.md §2): the pair is local[1] vs local[4],
+    # re-timed on every run. On a real cluster N->4N adds whole executors with their
     # own cores/caches/turbo; on one shared VM, thread pairs at higher
     # counts additionally share turbo headroom, LLC and memory bandwidth
     # between the two levels being compared — a hardware artifact of
@@ -536,11 +489,8 @@ def main():
     # efficiency). The 2->8 pair is reported in BENCH.md alongside as the
     # conservative same-box view. Each level is codegen-warmed on the
     # small headline corpus first; CPU-steal%% is recorded per wall.
-    if DO_SCALING and CPUS >= 8:
+    if CPUS >= 8:
         profile = os.environ.get("AOPWIKI_SCALING_PROFILE", "scaling")
-        n_cores = int(os.environ.get("AOPWIKI_SCALING_N", "1"))
-        reps_n = int(os.environ.get("AOPWIKI_SCALING_REPS_N", "1"))
-        reps_4n = int(os.environ.get("AOPWIKI_SCALING_REPS_4N", "3"))
         sc_corpus = ensure_corpus(profile)
         # pull the corpus into the OS page cache once: rep 0 of the first
         # measured level otherwise times cold-disk reads, not the engine
@@ -551,23 +501,6 @@ def main():
                 with open(os.path.join(_root, _f), "rb") as _fh:
                     while _fh.read(1 << 22):
                         pass
-        cache_path = os.path.join(sc_corpus, ".bench_scaling_cache.json")
-        # Durable twin of the cache, committed to git: synthdata/scaling*
-        # is gitignored (the 4GB corpus doesn't belong in the repo), so a
-        # sandbox re-clone wipes the measurement alongside the corpus and
-        # the next bench run re-measures an identical tree under a budget
-        # too small for full min-of-N reps. The cache stores MEASURED
-        # walls keyed to the exact source fingerprint; any source change
-        # still forces a fresh measurement.
-        fixture_cache = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "fixtures", "bench_scaling_cache.json")
-        cached = None
-        if os.environ.get("AOPWIKI_SCALING_CACHE", "1") != "0":
-            cached = _load_cached_scaling(key, cache_path, fixture_cache,
-                                          corpus=profile)
-
-        do_pin = os.environ.get("AOPWIKI_SCALING_PIN", "1") != "0"
 
         def measure(spark_factory, reps: int, pin_cpus: int | None = None):
             """pin_cpus: cpuset width for the measured reps (cluster
@@ -585,10 +518,9 @@ def main():
                 # execution memory
                 sp.catalog.clearCache()
                 sp.sparkContext._jvm.System.gc()
-                if do_pin:
-                    # re-pin each rep: python workers forked since the
-                    # last pin (e.g. during warm-up) join the cpuset
-                    cpuset = _pin_tree(pin_cpus)
+                # re-pin each rep: python workers forked since the last
+                # pin (e.g. during warm-up) join the cpuset
+                cpuset = _pin_tree(pin_cpus)
                 c0 = _cpu_snap()
                 sec, n_sc, ph = run_staged(sp, sc_corpus)
                 c1 = _cpu_snap()
@@ -598,123 +530,96 @@ def main():
                 phases.append(ph)
                 if time.time() - T_START > BUDGET * 0.9:
                     break
-            if do_pin:
-                _pin_tree(None)  # release the cpuset for the next leg
+            _pin_tree(None)  # release the cpuset for the next leg
             i = walls.index(min(walls))
             return (walls[i], steals[i], walls, steals, n_sc, phases[i],
                     cpuset)
 
-        def save_cache():
-            # incremental: each completed block lands on disk immediately,
-            # so a crash in a later block (the round-4 first attempt died
-            # in the executor pair) cannot lose the earlier measurements.
-            # Atomic per file (temp + rename): a crash mid-dump must not
-            # leave truncated JSON for the next load.
-            payload = {"src_key": key, "host": _host_fingerprint(),
-                       "scaling": result["scaling"]}
-            for cp in (cache_path, fixture_cache):
-                _atomic_json_dump(payload, cp)
-
-        if cached is not None:
-            result["scaling"] = cached
-        else:
-            sec_4n, st_4n, w_4n, s_4n, n_sc, ph_4n, cs_4n = \
-                measure(lambda: _fresh_spark(4 * n_cores), reps_4n,
-                        pin_cpus=4 * n_cores)
-            sec_n, st_n, w_n, s_n, _, ph_n, cs_n = \
-                measure(lambda: _fresh_spark(n_cores), reps_n,
-                        pin_cpus=n_cores)
-            rate_n, rate_4n = n_sc / sec_n, n_sc / sec_4n
-            result["scaling"] = {
-                "corpus": profile, "n_triples": n_sc,
-                "cores_n": n_cores, "cores_4n": 4 * n_cores,
-                "sec_n": round(sec_n, 2), "sec_4n": round(sec_4n, 2),
-                "steal_pct_n": st_n, "steal_pct_4n": st_4n,
-                "all_walls_n": [round(w, 1) for w in w_n],
-                "all_walls_4n": [round(w, 1) for w in w_4n],
-                "phases_n": ph_n, "phases_4n": ph_4n,
-                "rate_n": round(rate_n, 1), "rate_4n": round(rate_4n, 1),
-                "efficiency": round((rate_4n / rate_n) / 4, 3),
-                # cpusets actually applied (cluster container semantics,
-                # _pin_tree): null = pinning disabled/unsupported
-                "cpuset_n": cs_n, "cpuset_4n": cs_4n,
-                "measured_at": int(time.time()),
-            }
-            save_cache()
-            # secondary 4N -> 16N pair: shows the curve holds past 4 cores
-            # on this box. Same-box caveat: at 16 threads the two levels
-            # share turbo/LLC/bandwidth headroom unequally (the pure-ALU
-            # capacity probe bounds per-thread throughput loss at ~0.89 for
-            # 8->32, BENCH.md §2), so this pair UNDERSTATES what discrete
-            # executors would deliver; it is reported as supporting
-            # evidence, with the 1->4 pair as the headline.
-            if os.environ.get("AOPWIKI_SCALING_SECOND", "1") != "0":
-                try:
-                    reps_16 = int(os.environ.get(
-                        "AOPWIKI_SCALING_REPS_16N", "3"))
-                    sec_16, st_16, w_16, s_16, _, ph_16, cs_16 = \
-                        measure(lambda: _fresh_spark(16 * n_cores), reps_16,
-                                pin_cpus=16 * n_cores)
-                    rate_16 = n_sc / sec_16
-                    result["scaling"]["pair_4n_16n"] = {
-                        "cores_4n": 4 * n_cores, "cores_16n": 16 * n_cores,
-                        "sec_4n": round(sec_4n, 2),
-                        "sec_16n": round(sec_16, 2),
-                        "steal_pct_16n": st_16,
-                        "all_walls_16n": [round(w, 1) for w in w_16],
-                        "phases_16n": ph_16,
-                        "rate_4n": round(rate_4n, 1),
-                        "rate_16n": round(rate_16, 1),
-                        "efficiency": round((rate_16 / rate_4n) / 4, 3),
-                        "cpuset_16n": cs_16,
-                    }
-                except Exception as e:  # noqa: BLE001 — record, don't die
-                    result["scaling"]["pair_4n_16n"] = {"error": repr(e)}
-                save_cache()
-            # N vs 4N EXECUTORS via local-cluster: 1 executor (4 cores)
-            # vs 4 executors (4 cores each) as separate executor JVMs —
-            # own heaps, GCs, block managers, python workers, shuffle over
-            # the network stack. This is the literal shape of the
-            # north_rule criterion ("two cluster sizes, N and 4N
-            # executors"); the thread pairs above remain as the
-            # single-JVM view.
-            if os.environ.get("AOPWIKI_SCALING_EXEC", "1") != "0":
-                try:
-                    ex_cores = int(os.environ.get("AOPWIKI_EXEC_CORES", "4"))
-                    ex_mem = int(os.environ.get(
-                        "AOPWIKI_EXEC_MEM_MB", "10240"))
-                    reps_e1 = int(os.environ.get(
-                        "AOPWIKI_SCALING_REPS_E1", "2"))
-                    reps_e4 = int(os.environ.get(
-                        "AOPWIKI_SCALING_REPS_E4", "3"))
-                    # cpuset = total executor cores per level (the driver
-                    # shares it — conservative: a real cluster's driver
-                    # node is not part of the executor count)
-                    sec_e4, st_e4, w_e4, s_e4, n_e, ph_e4, cs_e4 = measure(
-                        lambda: _cluster_spark(4, ex_cores, ex_mem), reps_e4,
-                        pin_cpus=4 * ex_cores)
-                    sec_e1, st_e1, w_e1, s_e1, _, ph_e1, cs_e1 = measure(
-                        lambda: _cluster_spark(1, ex_cores, ex_mem), reps_e1,
-                        pin_cpus=ex_cores)
-                    rate_e1, rate_e4 = n_e / sec_e1, n_e / sec_e4
-                    result["scaling"]["executor_pair"] = {
-                        "mode": f"local-cluster[N,{ex_cores},{ex_mem}]",
-                        "execs_n": 1, "execs_4n": 4,
-                        "cores_per_exec": ex_cores,
-                        "sec_n": round(sec_e1, 2),
-                        "sec_4n": round(sec_e4, 2),
-                        "steal_pct_n": st_e1, "steal_pct_4n": st_e4,
-                        "all_walls_n": [round(w, 1) for w in w_e1],
-                        "all_walls_4n": [round(w, 1) for w in w_e4],
-                        "phases_n": ph_e1, "phases_4n": ph_e4,
-                        "rate_n": round(rate_e1, 1),
-                        "rate_4n": round(rate_e4, 1),
-                        "efficiency": round((rate_e4 / rate_e1) / 4, 3),
-                        "cpuset_n": cs_e1, "cpuset_4n": cs_e4,
-                    }
-                except Exception as e:  # noqa: BLE001 — record, don't die
-                    result["scaling"]["executor_pair"] = {"error": repr(e)}
-                save_cache()
+        sec_4n, st_4n, w_4n, s_4n, n_sc, ph_4n, cs_4n = \
+            measure(lambda: _fresh_spark(4 * SCALING_N), REPS_4N,
+                    pin_cpus=4 * SCALING_N)
+        sec_n, st_n, w_n, s_n, _, ph_n, cs_n = \
+            measure(lambda: _fresh_spark(SCALING_N), REPS_N, pin_cpus=SCALING_N)
+        rate_n, rate_4n = n_sc / sec_n, n_sc / sec_4n
+        result["scaling"] = {
+            "corpus": profile, "n_triples": n_sc,
+            "cores_n": SCALING_N, "cores_4n": 4 * SCALING_N,
+            "sec_n": round(sec_n, 2), "sec_4n": round(sec_4n, 2),
+            "steal_pct_n": st_n, "steal_pct_4n": st_4n,
+            "all_walls_n": [round(w, 1) for w in w_n],
+            "all_walls_4n": [round(w, 1) for w in w_4n],
+            "phases_n": ph_n, "phases_4n": ph_4n,
+            "rate_n": round(rate_n, 1), "rate_4n": round(rate_4n, 1),
+            "efficiency": round((rate_4n / rate_n) / 4, 3),
+            # cpusets actually applied (cluster container semantics,
+            # _pin_tree): null = pinning unsupported
+            "cpuset_n": cs_n, "cpuset_4n": cs_4n,
+            "measured_at": int(time.time()),
+            # always re-timed; the key stays for readers of older records
+            "cached": False,
+        }
+        # secondary 4N -> 16N pair: shows the curve holds past 4 cores
+        # on this box. Same-box caveat: at 16 threads the two levels
+        # share turbo/LLC/bandwidth headroom unequally (the pure-ALU
+        # capacity probe bounds per-thread throughput loss at ~0.89 for
+        # 8->32, BENCH.md §2), so this pair UNDERSTATES what discrete
+        # executors would deliver; it is reported as supporting
+        # evidence, with the 1->4 pair as the headline.
+        if os.environ.get("AOPWIKI_SCALING_SECOND", "1") != "0":
+            try:
+                sec_16, st_16, w_16, s_16, _, ph_16, cs_16 = \
+                    measure(lambda: _fresh_spark(16 * SCALING_N), REPS_16N,
+                            pin_cpus=16 * SCALING_N)
+                rate_16 = n_sc / sec_16
+                result["scaling"]["pair_4n_16n"] = {
+                    "cores_4n": 4 * SCALING_N, "cores_16n": 16 * SCALING_N,
+                    "sec_4n": round(sec_4n, 2),
+                    "sec_16n": round(sec_16, 2),
+                    "steal_pct_16n": st_16,
+                    "all_walls_16n": [round(w, 1) for w in w_16],
+                    "phases_16n": ph_16,
+                    "rate_4n": round(rate_4n, 1),
+                    "rate_16n": round(rate_16, 1),
+                    "efficiency": round((rate_16 / rate_4n) / 4, 3),
+                    "cpuset_16n": cs_16,
+                }
+            except Exception as e:  # noqa: BLE001 — record, don't die
+                result["scaling"]["pair_4n_16n"] = {"error": repr(e)}
+        # N vs 4N EXECUTORS via local-cluster: 1 executor vs 4 executors
+        # (EXEC_CORES each) as separate executor JVMs — own heaps, GCs,
+        # block managers, python workers, shuffle over the network stack.
+        # This is the literal shape of the north_rule criterion ("two
+        # cluster sizes, N and 4N executors"); the thread pairs above
+        # remain as the single-JVM view.
+        if os.environ.get("AOPWIKI_SCALING_EXEC", "1") != "0":
+            try:
+                # cpuset = total executor cores per level (the driver
+                # shares it — conservative: a real cluster's driver node
+                # is not part of the executor count)
+                sec_e4, st_e4, w_e4, s_e4, n_e, ph_e4, cs_e4 = measure(
+                    lambda: _cluster_spark(4, EXEC_CORES, EXEC_MEM_MB),
+                    REPS_E4, pin_cpus=4 * EXEC_CORES)
+                sec_e1, st_e1, w_e1, s_e1, _, ph_e1, cs_e1 = measure(
+                    lambda: _cluster_spark(1, EXEC_CORES, EXEC_MEM_MB),
+                    REPS_E1, pin_cpus=EXEC_CORES)
+                rate_e1, rate_e4 = n_e / sec_e1, n_e / sec_e4
+                result["scaling"]["executor_pair"] = {
+                    "mode": f"local-cluster[N,{EXEC_CORES},{EXEC_MEM_MB}]",
+                    "execs_n": 1, "execs_4n": 4,
+                    "cores_per_exec": EXEC_CORES,
+                    "sec_n": round(sec_e1, 2),
+                    "sec_4n": round(sec_e4, 2),
+                    "steal_pct_n": st_e1, "steal_pct_4n": st_e4,
+                    "all_walls_n": [round(w, 1) for w in w_e1],
+                    "all_walls_4n": [round(w, 1) for w in w_e4],
+                    "phases_n": ph_e1, "phases_4n": ph_e4,
+                    "rate_n": round(rate_e1, 1),
+                    "rate_4n": round(rate_e4, 1),
+                    "efficiency": round((rate_e4 / rate_e1) / 4, 3),
+                    "cpuset_n": cs_e1, "cpuset_4n": cs_e4,
+                }
+            except Exception as e:  # noqa: BLE001 — record, don't die
+                result["scaling"]["executor_pair"] = {"error": repr(e)}
 
     print(_emit(result, key))
 

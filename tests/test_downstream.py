@@ -299,14 +299,14 @@ def test_fingerprint_snapshot_id_pins_corpus(tmp_path):
 
 
 def test_fingerprint_ignores_dotfiles(tmp_path):
-    """Caches parked next to a corpus (e.g. the bench scaling cache) are
-    not corpus content."""
+    """Dotfiles parked next to a corpus (e.g. caches) are not corpus
+    content."""
     from aopwiki_spark.pipeline import _run_fingerprint
     d = tmp_path / "corpus"
     d.mkdir()
     (d / "part.parquet").write_bytes(b"AAAA")
     fp1 = _run_fingerprint(str(d), None)
-    (d / ".bench_scaling_cache.json").write_text("{}")
+    (d / ".corpus_cache.json").write_text("{}")
     (d / ".hidden").mkdir()
     (d / ".hidden" / "x").write_text("y")
     assert _run_fingerprint(str(d), None) == fp1
@@ -358,6 +358,21 @@ def test_uri_validation_engine_output(spark, smoke_dir):
 
 def _cache_is_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_clear_caches_releases_build_all_triples_inputs(spark, smoke_dir):
+    """build_all_triples returns only a lazy DataFrame; the caches of the
+    Inputs behind it (docs, linking outputs, gene table) must still be
+    releasable, by kgqueries.clear_caches()."""
+    from aopwiki_spark.kgqueries import clear_caches
+    from aopwiki_spark.pipeline import build_all_triples
+    # drop what earlier tests left: a reused Inputs would not persist again
+    clear_caches()
+    spark.catalog.clearCache()
+    assert build_all_triples(spark, smoke_dir).count() > 0
+    assert not _cache_is_empty(spark)
+    clear_caches()
+    assert _cache_is_empty(spark)
 
 
 def test_checkpointed_resume_and_stale_discard(spark, smoke_dir, tmp_path):

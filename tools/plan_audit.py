@@ -2,7 +2,8 @@
 
 1. Property-population audit (SURVEY.md A8 analogue of
    `scripts/property_audit.py`): per predicate, distinct subjects, per graph.
-2. `.explain("formatted")` dumps for the load-bearing plans so shuffle/
+2. `.explain("formatted")` dumps for the load-bearing plans and for
+   bench.py's per-op queries (``bench.PER_OP_QUERIES``), so shuffle/
    broadcast/pushdown decisions are reviewable (written to PLANS.md).
 
 Usage: python tools/plan_audit.py [corpus_dir]
@@ -89,23 +90,15 @@ def main():
               "fan back to spans via equi-join)"] = \
             MM.extract_media_features(inp.docs, decoder="real",
                                       payloads=payloads)
-        # ---- LLM-pipeline ops (same constructors the driver grades,
-        # over the documents/embeddings tables) ----
+        # ---- the per-op queries bench.py times (same list) ----
         td = os.environ.get("AOPWIKI_TESTDATA", "/root/testdata/sf0.001")
         if os.path.isdir(td):
-            from aopwiki_spark import queries as Q
-            for qname, note in [
-                ("minhash_lsh_pairs",
-                 "one md5 pass + integer affine re-hash; band-bucket "
-                 "equi-self-join"),
-                ("ngram_jaccard_pairs",
-                 "freq-capped inverted-index self-join, never all-pairs"),
-                ("simhash", "single md5 pass, map-only"),
-                ("ann_lsh_topk", "sign-sketch bucket equi-join"),
-                ("embedding_near_dup_pairs",
-                 "LSH-bucketed candidates + exact cosine verify"),
-            ]:
-                plans[f"{qname} ({note})"] = Q.QUERIES[qname](spark, td)
+            import __spark_entry__ as E
+            from bench import PER_OP_QUERIES
+            qs = E.queries()
+            for qname in PER_OP_QUERIES:
+                plans[f"{qname} (bench.py per-op query)"] = \
+                    qs[qname](spark, td)
         for name, df in plans.items():
             sections.append(f"## {name}\n\n```\n{explain_str(df)}\n```")
     finally:

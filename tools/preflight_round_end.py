@@ -3,24 +3,19 @@
 Run this before the driver closes a round. It checks, without starting
 Spark or re-measuring anything, every contract the driver grades on:
 
-  1. scaling cache validity — fixtures/bench_scaling_cache.json (and the
-     corpus-local twin if present) must carry the current ``bench._src_key()``
-     and this host's fingerprint; a mismatch means BENCH_r{N}.json will fall
-     back to a fresh ~1.5 h measurement at driver time (round-3 fiasco mode);
-  2. metric-line replay — rebuild the compact summary from the COMMITTED
+  1. metric-line replay — rebuild the compact summary from the COMMITTED
      BENCH_DETAILS.json (``git show HEAD:...`` — the working-tree copy may
      be a stale driver overwrite) through ``bench.metric_line``, the same
      code path ``bench._emit`` runs, field-shedding loop included;
-  3. roster contract — ``__spark_entry__.queries()`` is exactly the
+  2. roster contract — ``__spark_entry__.queries()`` is exactly the
      driver's row cap, every query has an ``oracle_sql()`` twin, and every
      oracle parses/binds in DuckDB over the driver's view layout (all via
      tools/driver_contract.py, the single copy of the contract);
-  4. tree hygiene — no uncommitted changes to hashed engine source
+  3. tree hygiene — no uncommitted changes to hashed engine source
      (aopwiki_spark/**, bench.py) NOR to the measurement record
-     (BENCH_DETAILS.json, fixtures/bench_scaling_cache.json,
-     fixtures/bench_best.json, LEAKCHECK.json): an uncommitted sidecar
-     means the committed record describes a different run than the tree
-     claims (the round-5 residual finding).
+     (BENCH_DETAILS.json, fixtures/bench_best.json, LEAKCHECK.json): an
+     uncommitted sidecar means the committed record describes a different
+     run than the tree claims (the round-5 residual finding).
 
 Exit 0 all-green, 1 otherwise, one line per check. The deeper (slow)
 verifications have their own tools: tools/check_oracles.py replays the full
@@ -57,21 +52,9 @@ def check(name: str, ok: bool, detail: str = "") -> None:
 
 def main() -> int:
     key = bench._src_key()
-    host = bench._host_fingerprint()
 
-    # 1. scaling cache validity
-    fixture = os.path.join(ROOT, "fixtures", "bench_scaling_cache.json")
-    try:
-        c = json.load(open(fixture))
-        check("scaling cache src_key", c.get("src_key") == key,
-              f"cache={c.get('src_key')} tree={key}")
-        check("scaling cache host", c.get("host") in (None, host),
-              f"cache={c.get('host')} here={host}")
-    except (OSError, ValueError) as ex:
-        check("scaling cache readable", False, str(ex))
-
-    # 2. metric-line replay from the COMMITTED sidecar (git show: the
-    # working-tree file may be a stale driver overwrite — step 4 flags
+    # 1. metric-line replay from the COMMITTED sidecar (git show: the
+    # working-tree file may be a stale driver overwrite — step 3 flags
     # that separately), through the exact bench emission path, shedding
     # loop included (a summary that only fits after shedding must PASS).
     try:
@@ -91,7 +74,7 @@ def main() -> int:
     except (OSError, ValueError, AssertionError) as ex:
         check("committed BENCH_DETAILS.json emits", False, str(ex))
 
-    # 3. roster contract
+    # 2. roster contract
     import __spark_entry__ as E
     qs, oracles = E.queries(), E.oracle_sql()
     check("roster is the driver cap", len(qs) == DRIVER_ROW_CAP,
@@ -103,11 +86,10 @@ def main() -> int:
     bad = explain_failures(con, oracles)
     check("oracle SQL parses in DuckDB", not bad, f"bad={sorted(bad)}")
 
-    # 4. tree hygiene over hashed source + the measurement record
+    # 3. tree hygiene over hashed source + the measurement record
     out = subprocess.run(
         ["git", "status", "--porcelain", "--", "aopwiki_spark", "bench.py",
-         "BENCH_DETAILS.json", "LEAKCHECK.json",
-         "fixtures/bench_scaling_cache.json", "fixtures/bench_best.json"],
+         "BENCH_DETAILS.json", "LEAKCHECK.json", "fixtures/bench_best.json"],
         cwd=ROOT, capture_output=True, text=True).stdout.strip()
     check("engine source + measurement record committed", not out,
           out.replace("\n", "; "))
